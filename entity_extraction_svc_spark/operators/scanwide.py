@@ -15,11 +15,19 @@ added.  Round-robin repartition is deterministic (Spark sorts before
 repartitioning, SPARK-23207) and the callers are row-local maps or
 aggregations whose results are partitioning-independent, so outputs are
 bit-identical either way.
+
+A probe that fails (size estimate or partition count) leaves the input as
+it is and logs a warning naming the exception, so a disabled widening is
+visible in the driver log.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 
 def widen_scan(df: DataFrame, min_parts: int | None = None,
@@ -44,7 +52,10 @@ def widen_scan(df: DataFrame, min_parts: int | None = None,
             if est < min_bytes:
                 return df
         cur = df.rdd.getNumPartitions()
-    except Exception:
+    except Exception as exc:
+        first_line = (str(exc).splitlines() or [""])[0]
+        log.warning("widen_scan: partition probe failed, input left as it "
+                    "is (%s: %s)", type(exc).__name__, first_line)
         return df
     if cur < target:
         return df.repartition(target)

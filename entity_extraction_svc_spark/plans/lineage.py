@@ -20,6 +20,10 @@ set-semantic: ``read_triples`` applies DISTINCT across run directories).
 At 10^12 docs the anti-join is a shuffle on url between the source and the
 lineage table — both sides pruned to the url column; AQE picks a broadcast
 anti-join while the lineage side is still small.
+
+A ``max_docs`` slice is spread over the session's default parallelism
+before it is persisted: the limit yields a single partition, and the fused
+Python pass over it would otherwise run on one core.
 """
 
 from __future__ import annotations
@@ -59,9 +63,13 @@ def processed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 def per_url_metrics(pages: DataFrame, linked: DataFrame, run_id: str) -> DataFrame:
     """One lineage row per processed url: partition id, mention/link counts,
-    max link score.  The partition id is the physical partition that carried
-    the url through the doc-grouped link stage.  Pages with zero mentions
-    still get a lineage row (they are processed — resume must skip them)."""
+    max link score.  The partition id is the output partition of the url
+    join that attaches the counts to ``pages``.  When AQE broadcasts the
+    counts (the usual case: one small row per url) that is the ``pages``
+    partition that carried the url, which is also the partition the fused
+    pass linked it on; under a sort-merge join it is the url's shuffle
+    partition.  Pages with zero mentions still get a lineage row (they are
+    processed — resume must skip them)."""
     per_url = linked.groupBy("url").agg(
         F.countDistinct("mention_id").alias("n_mentions"),
         F.count(
@@ -104,7 +112,10 @@ def run_checkpointed(
     if done is not None:
         pages = pages.join(done, "url", "left_anti")
     if max_docs is not None:
-        pages = pages.limit(max_docs)
+        # the limit collapses the slice to one partition: spread it so the
+        # fused pass over it runs on every core
+        pages = pages.limit(max_docs).repartition(
+            spark.sparkContext.defaultParallelism)
     # the slice is reused by three writes below — materialize it once so
     # resume semantics don't race with the lazily re-evaluated limit
     pages = pages.persist()
@@ -206,12 +217,15 @@ def repair_metrics(spark: SparkSession, out_dir: str) -> int:
         missing = lin.join(have, "run_id", "left_anti")
     except AnalysisException:
         missing = lin
+    # a few rows per run: AQE does not coalesce a cached plan's partitions,
+    # so without the coalesce the count and the append would each run
+    # spark.sql.shuffle.partitions tasks
     metrics = missing.groupBy("run_id", "partition_id").agg(
         F.count("*").alias("n_urls"),
         F.sum("n_mentions").alias("n_mentions"),
         F.sum("n_linked").alias("n_linked"),
         F.max("max_link_score").alias("max_link_score"),
-    ).persist()
+    ).coalesce(1).persist()
     n = metrics.count()
     if n:
         metrics.write.mode("append").parquet(metrics_path(out_dir))

@@ -288,3 +288,31 @@ def test_vacuum_is_path_spelling_robust(spark, fixture_dir):
     assert L.vacuum_triples(spark, alias)["removed"] == 0
     lin = spark.read.parquet(L.lineage_path(out))
     assert lin.count() == 60  # nothing deleted, store intact
+
+
+def test_max_docs_round_links_on_every_core(spark, fixture_dir, monkeypatch):
+    """A ``max_docs`` limit collapses the slice to one partition; the round
+    spreads it, so the fused pass runs on more than one partition of the
+    local[4] session and the lineage rows carry more than one partition
+    id.  The metrics repair still writes its few rows as one file."""
+    import glob
+    import os
+
+    seen = []
+    build_fused = L.build_fused
+
+    def spy(spark_, pages, *args, **kwargs):
+        seen.append(pages.rdd.getNumPartitions())
+        return build_fused(spark_, pages, *args, **kwargs)
+
+    monkeypatch.setattr(L, "build_fused", spy)
+    out = tempfile.mkdtemp(prefix="kg_spread_")
+    s = L.run_checkpointed(spark, f"{fixture_dir}/pages.parquet",
+                           fixture_dir, out, max_docs=60)
+    assert s["n_pages"] == 60
+    assert seen and seen[0] > 1
+    lin = spark.read.parquet(L.lineage_path(out))
+    assert lin.select("partition_id").distinct().count() > 1
+    met = spark.read.parquet(L.metrics_path(out))
+    assert met.agg(F.sum("n_urls")).first()[0] == 60
+    assert len(glob.glob(os.path.join(L.metrics_path(out), "*.parquet"))) == 1

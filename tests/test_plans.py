@@ -76,6 +76,23 @@ def test_minhash_is_shuffle_free(spark):
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
 
 
+def test_widen_scan_logs_a_failed_probe(spark, monkeypatch, caplog):
+    """A probe that fails leaves the input as it is and says so in the
+    log, naming the exception."""
+    import logging
+
+    from entity_extraction_svc_spark.operators import scanwide
+
+    def failing_probe(self):
+        raise RuntimeError("probe unavailable")
+
+    df = spark.range(10)
+    monkeypatch.setattr(type(df), "rdd", property(failing_probe))
+    with caplog.at_level(logging.WARNING, logger=scanwide.__name__):
+        assert scanwide.widen_scan(df) is df
+    assert "RuntimeError: probe unavailable" in caplog.text
+
+
 def test_bucketed_triples_join_has_no_exchange(spark, fixture_dir, tmp_path):
     """Co-located joins: a subj-subj self-join (2-hop traversal) over the
     bucketed triples table plans WITHOUT any Exchange — the bucketing
