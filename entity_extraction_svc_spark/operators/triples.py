@@ -4,10 +4,10 @@
 the reference's triple emission: for each linked entity, its KB triples over
 a whitelisted relation set.  Here that is a distinct-QID projection of the
 linked mentions broadcast-joined to the ``kb_triples`` dimension, then
-repartitioned by ``pmod(xxhash64(subj), P)`` for the skew-aware write
-(north rule: subject-hash partitioning; head QIDs like Q30/Q5 concentrate
-rows, xxhash64 spreads subjects uniformly across output partitions and AQE
-splits any residual skew at shuffle time).
+hash-partitioned on the subject for the write (north rule: subject-hash
+partitioning).  ``spark.sql.shuffle.partitions`` bounds the partition
+count and AQE coalesces small partitions from the shuffle statistics, so
+a small slice writes few files and a large one spreads over all of them.
 """
 
 from __future__ import annotations
@@ -37,9 +37,9 @@ def linked_qids(linked: DataFrame) -> DataFrame:
     )
 
 
-def materialize_triples(linked: DataFrame, kb_triples: DataFrame,
-                        num_partitions: int = 32) -> DataFrame:
-    """linked mentions x kb_triples over the whitelist -> (subj, pred, obj).
+def materialize_triples(linked: DataFrame, kb_triples: DataFrame) -> DataFrame:
+    """linked mentions x kb_triples over the whitelist -> distinct
+    (subj, pred, obj), hash-partitioned on ``subj``.
 
     kb_triples is the dimension side only in the lookup sense; at 10^12 docs
     the *distinct-QID* side is small (bounded by the KB), so the join is
@@ -53,9 +53,7 @@ def materialize_triples(linked: DataFrame, kb_triples: DataFrame,
         .select("subj", "pred", "obj")
         .distinct()
     )
-    return triples.repartition(
-        num_partitions, F.pmod(F.xxhash64("subj"), F.lit(num_partitions))
-    )
+    return triples.repartition("subj")
 
 
 def write_triples_bucketed(triples: DataFrame, table_name: str,

@@ -46,6 +46,7 @@ from entity_extraction_svc_spark.operators.tagger import (
     load_tagger,
 )
 from entity_extraction_svc_spark.operators.triples import materialize_triples
+from entity_extraction_svc_spark.schemas import TRIPLES
 from entity_extraction_svc_spark.sources.kb import (
     collect_linker_dicts,
     normalize_label,
@@ -254,10 +255,10 @@ def kb_broadcasts(spark: SparkSession, kb_dir: str):
 
 
 def build_fused(spark: SparkSession, pages: DataFrame, kb_dir: str,
-                source: str = "html", num_partitions: int = 32):
+                source: str = "html"):
     """Returns (linked, triples) via the fused plan."""
     tagger_bc, fine_bc, dicts_bc = kb_broadcasts(spark, kb_dir)
     linked = fused_link(pages, tagger_bc, dicts_bc, fine_bc, source)
-    kb_triples = spark.read.parquet(f"{kb_dir}/kb_triples.parquet")
-    triples = materialize_triples(linked, kb_triples, num_partitions)
+    kb_triples = spark.read.schema(TRIPLES).parquet(f"{kb_dir}/kb_triples.parquet")
+    triples = materialize_triples(linked, kb_triples)
     return linked, triples

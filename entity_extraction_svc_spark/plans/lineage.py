@@ -24,6 +24,10 @@ anti-join while the lineage side is still small.
 A ``max_docs`` slice is spread over the session's default parallelism
 before it is persisted: the limit yields a single partition, and the fused
 Python pass over it would otherwise run on one core.
+
+A round's commit costs what its slice costs: its tables are read with their
+declared schemas, and its ``n_triples`` counts only the triples it appended
+(the store total is ``read_triples(spark, out_dir).count()``).
 """
 
 from __future__ import annotations
@@ -31,10 +35,13 @@ from __future__ import annotations
 import os
 import uuid
 
+import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from entity_extraction_svc_spark.plans.fused import build_fused
+from entity_extraction_svc_spark.schemas import LINEAGE, METRICS
 
 
 def new_run_id() -> str:
@@ -54,10 +61,13 @@ def triples_path(out_dir: str) -> str:
 
 
 def processed_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The committed urls, or None when no lineage table exists yet.  Any
+    other read failure propagates: read as "nothing committed", it would make
+    the round relink and re-commit every committed url."""
     path = lineage_path(out_dir)
     try:
-        return spark.read.parquet(path).select("url").distinct()
-    except Exception:
+        return spark.read.schema(LINEAGE).parquet(path).select("url")
+    except AnalysisException:
         return None
 
 
@@ -104,7 +114,8 @@ def run_checkpointed(
     table, append triples + lineage + per-partition metrics.
 
     ``max_docs`` bounds the slice (used by tests to simulate a run killed
-    midway; a production run leaves it None).  Returns run stats.
+    midway; a production run leaves it None).  Returns run stats;
+    ``n_triples`` is the distinct triples this round appended.
     """
     run_id = run_id or new_run_id()
     pages = spark.read.parquet(pages_path)
@@ -147,6 +158,8 @@ def run_checkpointed(
     triples.write.mode("append").parquet(triples_path(out_dir))
     added = sorted(_triple_files() - before)
     _write_snapshot(out_dir, run_id, seq=len(_read_snapshots(out_dir)), files=added)
+    # materialize_triples applies distinct, so rows written = distinct triples
+    n_triples = sum(pq.read_metadata(f).num_rows for f in added)
     # the lineage append is the COMMIT POINT: a crash anywhere above leaves
     # these urls absent from lineage, so the next resume reprocesses them
     # (triples are set-semantic, so the duplicate appends dedupe on read;
@@ -163,7 +176,6 @@ def run_checkpointed(
     spark.catalog.refreshByPath(lineage_path(out_dir))
     spark.catalog.refreshByPath(triples_path(out_dir))
     repair_metrics(spark, out_dir)
-    n_triples = spark.read.parquet(triples_path(out_dir)).distinct().count()
     lineage.unpersist()
     linked.unpersist()
     pages.unpersist()
@@ -193,10 +205,11 @@ def repair_metrics(spark: SparkSession, out_dir: str) -> int:
     the missing run_ids from committed lineage and appends them.  Metrics
     run_ids are therefore always a subset of lineage run_ids, and a url
     reprocessed after a crash is counted in exactly one committed run.
-    Returns the number of backfilled (run_id, partition_id) rows.  At
-    10^12 docs the anti-join prunes to the two run_id columns and the agg
-    only touches the missing runs' lineage partitions."""
-    # missing/empty tables are expected states (AnalysisException, like
+    Returns the number of backfilled (run_id, partition_id) rows.  Lineage
+    is not partitioned by run_id, so the anti-join reads the run_id of every
+    lineage row (pruned to that column); only the aggregate is limited to
+    the missing runs' rows."""
+    # a missing table is an expected state (AnalysisException, like
     # streaming/curate._read_store); anything else — a TRANSIENT read
     # failure — must propagate: swallowing it would treat every committed
     # run as missing and append duplicate metrics forever (append-mode
@@ -205,14 +218,12 @@ def repair_metrics(spark: SparkSession, out_dir: str) -> int:
     # isdir is always False and would silently disable metrics.  Public
     # pyspark.errors.AnalysisException is the base both classic and
     # connect sessions raise; the captured-module class is one subclass.
-    from pyspark.errors import AnalysisException
-
     try:
-        lin = spark.read.parquet(lineage_path(out_dir))
+        lin = spark.read.schema(LINEAGE).parquet(lineage_path(out_dir))
     except AnalysisException:
         return 0
     try:
-        have = spark.read.parquet(metrics_path(out_dir)) \
+        have = spark.read.schema(METRICS).parquet(metrics_path(out_dir)) \
             .select("run_id").distinct()
         missing = lin.join(have, "run_id", "left_anti")
     except AnalysisException:
@@ -310,8 +321,8 @@ def compact_triples(spark: SparkSession, out_dir: str,
     and collapse snapshot history up to the latest commit — the
     parquet-manifest stand-in for Iceberg's rewrite_data_files +
     expire_snapshots.  At 10^12 docs the append-per-run layout is the
-    operational pain point (thousands of runs x 32 files each); compaction
-    restores a bounded file count and subject-hash locality in one job.
+    operational pain point (thousands of runs, each with its own files);
+    compaction restores a bounded file count and subject-hash locality in one job.
 
     Crash-safe BY SET SEMANTICS, no atomic swap needed: compacted files
     are moved into the live dir BEFORE the manifest, and the old files
@@ -349,7 +360,7 @@ def compact_triples(spark: SparkSession, out_dir: str,
     tmp = os.path.join(out_dir, f"_compact_tmp_{seq}")
     (
         spark.read.parquet(p).distinct()
-        .repartition(num_buckets, F.pmod(F.xxhash64("subj"), F.lit(num_buckets)))
+        .repartition(num_buckets, "subj")
         .write.mode("overwrite").parquet(tmp)
     )
     # dst names carry this ATTEMPT's uuid, not just seq: a rerun after a
@@ -423,8 +434,7 @@ def retract_triples(spark: SparkSession, out_dir: str,
     tmp = os.path.join(out_dir, f"_retract_tmp_{seq}")
     (
         remaining
-        .repartition(num_buckets,
-                     F.pmod(F.xxhash64("subj"), F.lit(num_buckets)))
+        .repartition(num_buckets, "subj")
         .write.mode("overwrite").parquet(tmp)
     )
     moved = []

@@ -45,7 +45,6 @@ def build_pipeline(
     pages_path: str,
     kb_dir: str,
     source: str = "html",
-    num_partitions: int = 32,
     input_partitions: int | None = None,
 ) -> PipelineArtifacts:
     """``input_partitions`` spreads a small single-file input across workers
@@ -55,7 +54,7 @@ def build_pipeline(
     pages = spark.read.parquet(pages_path)
     if input_partitions is not None:
         pages = pages.repartition(input_partitions)
-    return build_pipeline_df(spark, pages, kb_dir, source, num_partitions)
+    return build_pipeline_df(spark, pages, kb_dir, source)
 
 
 def build_pipeline_df(
@@ -63,7 +62,6 @@ def build_pipeline_df(
     pages: DataFrame,
     kb_dir: str,
     source: str = "html",
-    num_partitions: int = 32,
     cache_chunks: bool = True,
 ) -> PipelineArtifacts:
     """``cache_chunks`` persists the chunk table (MEMORY_AND_DISK): it feeds
@@ -91,5 +89,5 @@ def build_pipeline_df(
     linked = link_entities_df(mentions, chunks, dicts_bc)
 
     kb_triples = spark.read.parquet(f"{kb_dir}/kb_triples.parquet")
-    triples = materialize_triples(linked, kb_triples, num_partitions)
+    triples = materialize_triples(linked, kb_triples)
     return PipelineArtifacts(pages, extracted, chunks, mentions, linked, triples)

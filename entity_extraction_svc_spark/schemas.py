@@ -136,3 +136,13 @@ LINEAGE = StructType(
         StructField("max_link_score", DoubleType(), True),
     ]
 )
+METRICS = StructType(
+    [
+        StructField("run_id", StringType(), False),
+        StructField("partition_id", IntegerType(), False),
+        StructField("n_urls", LongType(), False),
+        StructField("n_mentions", LongType(), True),
+        StructField("n_linked", LongType(), True),
+        StructField("max_link_score", DoubleType(), True),
+    ]
+)

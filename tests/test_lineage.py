@@ -134,8 +134,9 @@ def test_compaction(spark, fixture_dir):
     s2 = L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
     mid = {(r.subj, r.pred, r.obj) for r in L.read_triples(spark, out).collect()}
 
-    stats = L.compact_triples(spark, out, num_buckets=4)
-    assert stats["files_after"] <= 4 < stats["files_before"]
+    # each append writes at least one file, so one bucket is fewer files
+    stats = L.compact_triples(spark, out, num_buckets=1)
+    assert stats["files_after"] == 1 < stats["files_before"]
     assert {(r.subj, r.pred, r.obj)
             for r in L.read_triples(spark, out).collect()} == mid
     # time travel: the compaction state, and the run it equals, both work
@@ -178,6 +179,73 @@ def test_compaction(spark, fixture_dir):
     assert stats2["files_after"] <= 4
     assert {(r.subj, r.pred, r.obj)
             for r in L.read_triples(spark, out).collect()} == full
+
+
+def _store_from(out: str, src: str) -> None:
+    """A triples store holding one file: a copy of ``src``."""
+    import os
+    import shutil
+
+    os.makedirs(L.triples_path(out))
+    shutil.copy(src, os.path.join(L.triples_path(out), "part-00000.parquet"))
+
+
+def test_compaction_fills_every_bucket(spark, fixture_dir):
+    """compact_triples and retract_triples hash the subject once, so every
+    one of ``num_buckets`` buckets gets rows and becomes one file."""
+    import glob
+    import os
+
+    golden = f"{fixture_dir}/golden_triples.parquet"
+    out = tempfile.mkdtemp(prefix="kg_buckets_")
+    _store_from(out, golden)
+    assert L.compact_triples(spark, out, num_buckets=4)["files_after"] == 4
+    assert len(glob.glob(os.path.join(L.triples_path(out), "*.parquet"))) == 4
+
+    out = tempfile.mkdtemp(prefix="kg_buckets_")
+    _store_from(out, golden)
+    drop = spark.read.parquet(golden).limit(1)
+    stats = L.retract_triples(spark, out, drop, num_buckets=4)
+    assert stats["removed"] == 1 and stats["files_after"] == 4
+
+
+def test_round_n_triples_counts_its_own_appends(spark, fixture_dir):
+    """A round's ``n_triples`` is the rows of the files it appended (its
+    distinct triples), not the distinct triples of the whole store."""
+    import pyarrow.parquet as pq
+
+    out = tempfile.mkdtemp(prefix="kg_ntriples_")
+    pages_path = f"{fixture_dir}/pages.parquet"
+    L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
+    s2 = L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
+    snap = [s for s in L._read_snapshots(out) if s["run_id"] == s2["run_id"]][0]
+    added = sum(pq.read_metadata(f).num_rows for f in snap["files"])
+    r2 = L.read_triples(spark, out, as_of=s2["run_id"])
+    assert s2["n_triples"] == added < r2.count()
+
+
+def test_processed_urls_raises_on_read_failure(spark, monkeypatch):
+    """Only a missing lineage table means "nothing committed"; an empty one
+    reads as no urls, and any other read failure propagates instead of
+    making the round relink every committed url."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    import pytest
+
+    def fail(self, *paths, **options):
+        raise OSError("transient read failure")
+
+    out = tempfile.mkdtemp(prefix="kg_lin_err_")
+    monkeypatch.setattr(DataFrameReader, "parquet", fail)
+    with pytest.raises(OSError, match="transient"):
+        L.processed_urls(spark, out)
+    monkeypatch.undo()
+
+    assert L.processed_urls(spark, out) is None
+    os.makedirs(L.lineage_path(out))
+    assert L.processed_urls(spark, out).count() == 0
 
 
 def test_vacuum_orphans(spark, fixture_dir):

@@ -40,7 +40,7 @@ def test_triples_plan_broadcast_semi_and_pushdown(spark, fixture_dir):
     plan = _plan(triples)
     assert "PushedFilters: [In(pred, " in plan
     assert "BroadcastHashJoin LeftSemi" in plan.replace("  ", " ")
-    assert "xxhash64(subj" in plan
+    assert "hashpartitioning(subj" in plan
 
 
 def test_cosine_topk_plan(spark):
