@@ -9,6 +9,7 @@ training-data queries run on the driver's sf_dir tables.
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 from collections.abc import Callable
@@ -22,6 +23,8 @@ if REPO not in sys.path:
 
 FIXTURES = os.path.join(REPO, "fixtures")
 
+log = logging.getLogger(__name__)
+
 _PIPELINE_CACHE: dict = {}
 _SHIPPED: set = set()
 
@@ -29,16 +32,22 @@ _SHIPPED: set = set()
 def _prep(spark: SparkSession) -> None:
     """Ship the package zip to this session's executors (the driver creates
     its own SparkSession without our get_spark, so pandas-UDF closures would
-    otherwise fail to unpickle on workers launched outside the repo root)."""
+    otherwise fail to unpickle on workers launched outside the repo root).
+    A failed ship is logged, not raised: an already-added file or a
+    restricted session may still resolve imports from the working
+    directory."""
     key = id(spark)
     if key not in _SHIPPED:
         from entity_extraction_svc_spark.session import _ship_package
 
         try:
             _ship_package(spark)
-        except Exception:
-            pass  # already-added file or a restricted session — imports may
-            # still resolve via the driver's cwd
+        except Exception as exc:
+            first_line = (str(exc).splitlines() or [""])[0]
+            log.warning("_prep: shipping the package zip failed; workers "
+                        "import the package only if it is on their path "
+                        "(%s: %s)",
+                        type(exc).__name__, first_line)
         _SHIPPED.add(key)
 
 
@@ -129,8 +138,9 @@ def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_linked_top1_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production (fused, shuffle-free) plan against the same goldens —
-    the driver gate validates both plans, not just the staged one."""
+    """build_fused's linked rows as the runner, resume rounds and streaming
+    call it (no pipeline artifacts in between), against the same goldens
+    as kg_linked_top1."""
     from entity_extraction_svc_spark.fixtures import ensure_fixtures
     from entity_extraction_svc_spark.plans.fused import build_fused
 

@@ -65,17 +65,13 @@ def stage_fns(spark, sf_dir: str):
     fns = {}
 
     # ---- dedup_ngram_jaccard internals -------------------------------
+    # the shingle-set pass and its explode, as ngram_jaccard_pairs runs them
     def ngram_shingle():
-        sh = dd.with_shingles(docs, "text", 3).select(
-            F.col("doc_id").alias("id"), F.array_distinct(F.col("_sh")).alias("sh")
-        )
-        noop(sh)
+        noop(dd.shingle_set_rows(docs))
 
     def ngram_index():
-        sh = dd.with_shingles(docs, "text", 3).select(
-            F.col("doc_id").alias("id"), F.array_distinct(F.col("_sh")).alias("sh")
-        )
-        noop(sh.select("id", F.explode("sh").alias("shingle")))
+        noop(dd.shingle_set_rows(docs).select(
+            "id", F.explode("sh").alias("shingle")))
 
     def ngram_full():
         dd.ngram_jaccard_pairs(docs, threshold=0.5).count()

@@ -5,12 +5,13 @@ A from-scratch re-expression of the capabilities of
 idiomatic Spark batch pipeline:
 
     pages(url, warc_ts, html, text, lang)
-      -> extract_text      (byte-identical boilerplate strip, pandas UDF)
-      -> chunk             (sentence packing, mapInPandas)
-      -> detect_mentions   (NER stand-in w/ reference BIO-decode semantics)
-      -> classify_tags     (EL fine-tag top-3)
-      -> link_entities     (inverted-index candidate gen + fuzzy scoring +
-                            connection ranking, applyInPandas by url)
+      -> one mapInPandas pass per Arrow batch (plans/fused.py):
+           extract text    (byte-identical boilerplate strip)
+           chunk           (sentence packing, chunk_doc)
+           tag + decode    (NER stand-in w/ reference BIO-decode semantics)
+           fine tag        (EL fine-tag lookup, broadcast dict)
+           link            (inverted-index candidate gen + fuzzy scoring +
+                            connection ranking, link_doc per document)
       -> canonicalize      (connected-components alias clustering)
       -> triples           ((subj, pred, obj) partitioned by subject hash)
 

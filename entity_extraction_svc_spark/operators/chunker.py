@@ -1,9 +1,10 @@
 """Doc -> chunk explode with sentence offsets (reference C1-C4).
 
-Re-expresses ``src/ner_chunker.py:57-195`` as a ``mapInPandas`` flatMap:
-one doc row in, N chunk rows out, each carrying its sentences and their
-in-chunk char offsets.  The reference's batch regrouping (C5,
-ner_chunker.py:172-177) is unnecessary — Arrow record batches replace it.
+Re-expresses ``src/ner_chunker.py:57-195`` as ``chunk_doc``, which the fused
+plan's ``mapInPandas`` calls once per document: one doc in, N chunks out,
+each carrying its sentences and their in-chunk char offsets.  The
+reference's batch regrouping (C5, ner_chunker.py:172-177) is unnecessary —
+Arrow record batches replace it.
 
 Differences from the reference, by construction (documented drop-ins):
   * nltk ``sent_tokenize`` -> deterministic regex splitter (C2 stand-in).
@@ -17,11 +18,7 @@ The embedded-HTML sniffing (H6, ner_chunker.py:75-90) and mojibake map
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from string import punctuation
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from entity_extraction_svc_spark.functions import htmltext
 
@@ -31,12 +28,6 @@ _SENT_SPLIT = re.compile(r"(?<=[.!?])\s+")
 _PUNCT_EXT = punctuation + " " + "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
 _RUSSIAN = set("абвгдеёжзийклмнопрстуфхцчшщъыьэюя")
 _WS = re.compile(r"\s+")
-
-CHUNK_SCHEMA = (
-    "url string, lang string, chunk_id int, chunk_text string, "
-    "sentences array<string>, sentences_offsets array<struct<s:int,e:int>>, "
-    "doc_text string"
-)
 
 
 def _subword_len(token: str) -> int:
@@ -156,40 +147,3 @@ def chunk_doc(doc: str, subword_len=None) -> list[tuple[str, list[str], list[tup
         # empty-doc placeholder (C4, ner_chunker.py:166-170)
         out.append(("а", [doc], [(0, len(doc))]))
     return out
-
-
-def chunk(extracted: DataFrame) -> DataFrame:
-    """(url, text, lang) -> chunk rows.  doc_text rides only on chunk 0 to
-    avoid duplicating the document per chunk at scale (it is needed once per
-    doc, for raw-offset re-alignment)."""
-
-    def _chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            langs = pdf["lang"] if "lang" in pdf.columns else [None] * len(pdf)
-            for url, text, lang in zip(pdf["url"], pdf["text"], langs):
-                doc = text or ""
-                for chunk_id, (chunk_text, sents, offs) in enumerate(chunk_doc(doc)):
-                    rows.append(
-                        {
-                            "url": url,
-                            "lang": lang or "en",
-                            "chunk_id": chunk_id,
-                            "chunk_text": chunk_text,
-                            "sentences": sents,
-                            "sentences_offsets": [
-                                {"s": s, "e": e} for s, e in offs
-                            ],
-                            "doc_text": doc if chunk_id == 0 else None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "lang", "chunk_id", "chunk_text", "sentences",
-                    "sentences_offsets", "doc_text",
-                ],
-            )
-
-    cols = ["url", "text"] + (["lang"] if "lang" in extracted.columns else [])
-    return extracted.select(*cols).mapInPandas(_chunk_batches, CHUNK_SCHEMA)

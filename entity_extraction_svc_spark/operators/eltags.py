@@ -3,19 +3,17 @@
 The reference runs a roberta span classifier over 48 fine tags
 (``src/torch_transformers_el_tags.py:86-177``) and keeps the top-3
 (proba, tag) pairs per mention (``torch_transformers_preprocessor.py:516-535``).
-Here the deterministic stand-in is a **broadcast hash join** of mention
-surfaces against the gazetteer dimension — fully JVM-side (no Python), with
-the same output schema (``tags_with_probas``-equivalent columns) so a real
-model (a mapInPandas batched-inference stage) drops in unchanged.
+Here the deterministic stand-in is a lookup of the normalized mention
+surface in a broadcast dict built from the gazetteer dimension
+(``plans.fused._fine_tag_lookup``), done per mention inside the fused pass;
+the fine tag and ``ALT_FINE`` runner-up fill the same ``fine_tag`` /
+``alt_tag`` columns a real model would.
 
 Ambiguous surfaces resolve to the most popular entity's tag (max num_rels),
 mirroring how a trained classifier follows the majority sense.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # deterministic second-guess tag per fine tag (the classifier's runner-up)
 ALT_FINE = {
@@ -26,37 +24,3 @@ ALT_FINE = {
     "WORK_OF_ART": "LITERARY_WORK", "LITERARY_WORK": "WORK_OF_ART",
     "FILM": "WORK_OF_ART", "SONG": "WORK_OF_ART", "PRODUCT": "WORK_OF_ART",
 }
-
-
-def norm_expr(col):
-    """SQL twin of sources.kb.normalize_label (lower, drop .,&, -'/: -> space,
-    collapse whitespace) — keeps the join key computation in codegen."""
-    x = F.lower(col)
-    x = F.translate(x, ".,&", "")
-    x = F.translate(x, "-'/:()\"", "       ")
-    x = F.regexp_replace(x, r"\s+", " ")
-    return F.trim(x)
-
-
-def classify_tags(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
-    """mentions(url, substr, ...) -> + fine_tag, alt_tag columns.
-
-    Broadcast equi-join on the normalized surface; the gazetteer is a
-    dimension table (SURVEY.md §4: partition pruning on tag becomes a
-    predicate, the index itself is broadcast).
-    """
-    alt_items = [x for kv in ALT_FINE.items() for x in kv]
-    alt_map = F.create_map(*[F.lit(x) for x in alt_items])
-
-    gaz = (
-        gazetteer.withColumn("norm_surface", norm_expr(F.col("surface")))
-        .groupBy("norm_surface")
-        .agg(F.expr("max_by(fine_tag, num_rels)").alias("fine_tag"))
-    )
-    out = (
-        mentions.withColumn("norm_substr", norm_expr(F.col("substr")))
-        .join(F.broadcast(gaz), F.col("norm_substr") == F.col("norm_surface"), "left")
-        .drop("norm_surface", "norm_substr")
-        .withColumn("alt_tag", F.coalesce(alt_map[F.col("fine_tag")], F.lit("MISC")))
-    )
-    return out

@@ -4,9 +4,10 @@ Spark mapping of reference operators G1-G15, R1-R6, P1-P8 (SURVEY.md §2.6-2.8,
 ``src/entity_linking.py``).  The reference's doc-level statefulness (5-pass
 candidate search with PER memoization and P641 type seeding, within-doc
 connection ranking, doc-frequent-type boost, main-location vote) makes the
-document the atomic unit, so the whole stage is one cogrouped
-``applyInPandas`` keyed by url: mentions on one side, chunk rows (sentences +
-raw text) on the other.  Everything inside is dictionary math against the
+document the atomic unit, so the whole stage is ``link_doc``, called once
+per document inside the fused plan's ``mapInPandas`` (plans/fused.py), where
+the doc's mentions, sentences and raw text are already in hand: nothing is
+regrouped by url.  Everything inside is dictionary math against the
 broadcast KB image (LinkerDicts) — vectorized Arrow batches in, no per-row
 Python at the API level.
 
@@ -23,7 +24,6 @@ import copy
 import re
 from collections import defaultdict
 
-import pandas as pd
 
 from entity_extraction_svc_spark.functions.fuzz import ratio as fuzz_ratio
 from entity_extraction_svc_spark.functions.stopwords import (
@@ -906,7 +906,7 @@ def realign_mentions(raw_text: str, mentions: list[dict]) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# per-doc driver + the cogrouped applyInPandas operator
+# per-document linking
 # ---------------------------------------------------------------------------
 
 COARSE_TO_FINE = {"PER": "PER", "GPE": "CITY", "LOC": "LOC", "ORG": "ORG",
@@ -1007,75 +1007,3 @@ def link_doc(d: LinkerDicts, raw_text: str, sentences: list[str],
                 "conn_score_tag": int(row[4]) if row else None,
             })
     return out_rows
-
-
-LINK_BUCKETS = 256  # url-hash buckets per cogroup (see link_entities_df)
-
-
-def _link_one_doc(d: LinkerDicts, mentions_pdf: pd.DataFrame,
-                  chunks_pdf: pd.DataFrame) -> list[dict]:
-    """Link a single document given its mention rows + chunk rows."""
-    chunks_pdf = chunks_pdf.sort_values("chunk_id")
-    # reassemble doc-level sentences + offsets (N6 already shifted)
-    sentences: list[str] = []
-    sentences_offsets: list[tuple[int, int]] = []
-    raw_text = ""
-    for _, row in chunks_pdf.iterrows():
-        if row["chunk_id"] == 0 and row["doc_text"] is not None:
-            raw_text = row["doc_text"]
-        shift = int(row["offset_shift"])
-        for sent, off in zip(row["sentences"], row["sentences_offsets"]):
-            sentences.append(sent)
-            s, e = (off["s"], off["e"]) if isinstance(off, dict) else (off[0], off[1])
-            sentences_offsets.append((s + shift, e + shift))
-    mentions = mentions_pdf.sort_values(["start", "end", "substr"]).to_dict("records")
-    lang = chunks_pdf["lang"].iloc[0] if "lang" in chunks_pdf.columns else "en"
-    return link_doc(d, raw_text, sentences, sentences_offsets, mentions,
-                    lang or "en")
-
-
-def link_entities_df(mentions_df, chunks_with_shift_df, dicts_bc,
-                     buckets: int = LINK_BUCKETS):
-    """The doc-grouped linking operator: cogrouped applyInPandas by
-    url-hash bucket, with the per-url grouping done in pandas inside the UDF.
-
-    The document is the semantic unit, but cogrouping by raw url means one
-    Arrow batch + pandas construction PER DOCUMENT (~10ms of fixed overhead
-    each — measured to dominate the stage and cap 8→32-core speedup at
-    ~1.6x).  Salting the key to ``pmod(xxhash64(url), buckets)`` keeps the
-    same shuffle shape but amortizes the per-group cost over hundreds of
-    docs; ``DataFrame.groupby('url')`` inside the UDF is microseconds per
-    doc.  At cluster scale buckets should be >= 4x total cores so AQE can
-    balance; doc-level results are unchanged (each url still lands wholly in
-    exactly one group).
-
-    mentions_df: url, substr, start, end, proba, tag, fine_tag, alt_tag
-    chunks_with_shift_df: url, chunk_id, sentences, sentences_offsets,
-                          offset_shift, doc_text (chunk 0 only)
-    """
-    from pyspark.sql import functions as F
-
-    cols = ["url", "mention_id", "substr", "start", "end", "rank", "qid", "conf",
-            "page", "ent_tag", "substr_score", "num_rels", "conn_score_notag",
-            "conn_score_tag"]
-
-    def _link(mentions_pdf: pd.DataFrame, chunks_pdf: pd.DataFrame) -> pd.DataFrame:
-        if mentions_pdf.empty or chunks_pdf.empty:
-            return pd.DataFrame(columns=cols)
-        d: LinkerDicts = dicts_bc.value
-        out: list[dict] = []
-        chunk_groups = dict(tuple(chunks_pdf.groupby("url", sort=False)))
-        for url, m_pdf in mentions_pdf.groupby("url", sort=False):
-            c_pdf = chunk_groups.get(url)
-            if c_pdf is None:
-                continue
-            out.extend(_link_one_doc(d, m_pdf, c_pdf))
-        return pd.DataFrame(out, columns=cols)
-
-    bucket = F.pmod(F.xxhash64("url"), F.lit(buckets)).alias("_bucket")
-    return (
-        mentions_df.withColumn("_bucket", bucket)
-        .groupBy("_bucket")
-        .cogroup(chunks_with_shift_df.withColumn("_bucket", bucket).groupBy("_bucket"))
-        .applyInPandas(_link, LINKED_SCHEMA)
-    )

@@ -1,4 +1,4 @@
-"""Mention detection: chunk rows -> mention rows (reference N1-N8).
+"""Mention detection: chunk text -> mention spans (reference N1-N8).
 
 The reference runs a BERT token tagger (N3) then decodes BIO runs to mention
 spans (N5, ``src/entity_detection_parser.py:140-251``).  Here the model is
@@ -8,20 +8,19 @@ faithful port of the reference's semantics (replace map, stopword / short
 digit / length filters, trailing-comma strip, mean-proba rounding), so a
 BERT-backed tagger can drop in without touching the pipeline.
 
-Execution shape: ``mapInPandas`` over chunk rows (the model scan is the hot
-path; batched + Arrow), with the gazetteer shipped as a broadcast variable
-(north rule: model broadcast per executor).  The chunk->doc offset merge
-(N6, ner_chunker.py:308-370) is a running-total window aggregation done in
-the DataFrame API before this operator, so the UDF emits doc-level offsets
-directly and no extra join is needed.
+Execution shape: the tagger and the decode run inside the fused plan's one
+``mapInPandas`` over the pages (plans/fused.py; the model scan is the hot
+path, batched + Arrow), with the tagger shipped as a broadcast variable
+(north rule: model broadcast per executor).  The model sees one batch per
+Arrow batch, spanning the chunks of many documents.  The chunk->doc offset
+merge (N6, ner_chunker.py:308-370) is the running shift the same pass keeps
+per document, so spans leave it with doc-level offsets and no join.
 """
 
 from __future__ import annotations
 
 import string
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,11 +44,6 @@ REPLACE_TOKENS = [
     (" - ", "-"), ("'s", ""), (" .", ""), ("{", ""), ("}", ""),
     ("  ", " "), ('"', "'"), ("(", ""), (")", ""),
 ]
-
-MENTION_SCHEMA = (
-    "url string, chunk_id int, substr string, start int, end int, "
-    "proba double, tag string"
-)
 
 
 def tokenize_with_offsets(text: str) -> tuple[list[str], list[tuple[int, int]]]:
@@ -185,78 +179,6 @@ def decode_bio(
         for m in mentions
         if all(ch in pr for ch in m[0]) and any(ch.isalnum() for ch in m[0])
     ]
-
-
-def with_offset_shift(chunks: DataFrame) -> DataFrame:
-    """N6 as a running-total window agg: shift_i = sum(len(chunk)+1) over
-    preceding chunks of the same doc (ner_chunker.py:333-341)."""
-    w = (
-        Window.partitionBy("url")
-        .orderBy("chunk_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return chunks.withColumn(
-        "offset_shift",
-        F.coalesce(F.sum(F.length("chunk_text") + F.lit(1)).over(w), F.lit(0)).cast("int"),
-    )
-
-
-def detect_mentions(chunks_with_shift: DataFrame, tagger_bc) -> DataFrame:
-    """chunk rows (+offset_shift) -> mention rows with doc-level offsets.
-
-    ``tagger_bc`` broadcasts any ``tag_batch`` protocol tagger
-    (operators/tagger.py): the model sees ONE batch per Arrow batch,
-    spanning chunks of many documents; the O-threshold decode (N4) and BIO
-    decode (N5) run on the returned distributions.
-    """
-
-    def _ner_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from entity_extraction_svc_spark.operators.tagger import (
-            decode_tagged,
-            decode_two_headed,
-        )
-
-        tagger = tagger_bc.value
-        two_headed = hasattr(tagger, "fine_tags")
-        for pdf in batches:
-            # soft-hyphen strip (H7, ner_chunker.py:243)
-            texts = [(t or "").replace("\xad", " ") for t in pdf["chunk_text"]]
-            tagged = tagger.tag_batch(texts)  # one model call per Arrow batch
-            langs = pdf["lang"] if "lang" in pdf.columns else [None] * len(pdf)
-            rows = []
-            for tt, url, chunk_id, shift, lang in zip(
-                tagged, pdf["url"], pdf["chunk_id"], pdf["offset_shift"], langs
-            ):
-                if two_headed:
-                    decoded = [
-                        (substr, start, end, proba, coarse)
-                        for substr, start, end, proba, _fine, coarse in
-                        decode_two_headed(tt, tagger, lang=lang or "en")
-                    ]
-                else:
-                    decoded = decode_tagged(tt, tagger.tags_init,
-                                            lang=lang or "en")
-                for substr, start, end, proba, tag in decoded:
-                    rows.append(
-                        {
-                            "url": url,
-                            "chunk_id": int(chunk_id),
-                            "substr": substr,
-                            "start": int(start + shift),
-                            "end": int(end + shift),
-                            "proba": proba,
-                            "tag": tag,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "chunk_id", "substr", "start", "end", "proba", "tag"],
-            )
-
-    cols = ["url", "chunk_id", "chunk_text", "offset_shift"] + (
-        ["lang"] if "lang" in chunks_with_shift.columns else []
-    )
-    return chunks_with_shift.select(*cols).mapInPandas(_ner_batches, MENTION_SCHEMA)
 
 
 def bio_training_rows(docs: DataFrame, mentions: DataFrame,

@@ -142,7 +142,7 @@ class SoftGazetteerTagger:
 
     Decoded output is identical to the round-1 hard ``GazetteerTagger``
     (same matches, same 0.97 probas) — asserted by tests/test_tagger.py —
-    so the fused/staged plans and all goldens are unchanged by the seam.
+    so the fused plan and all goldens are unchanged by the seam.
     """
 
     def __init__(self, surfaces: dict[tuple[str, ...], str],
@@ -603,7 +603,7 @@ class HFTwoHeadedTagger:
     cache; without torch the load raises the honest NotImplementedError.
     decode_two_headed then applies the deployed MISC gate
     (INCLUDE_MISC / MISC_THRES=0.88) exactly as for the gazetteer2
-    stand-in, so both plans (staged + fused) take this tagger unchanged.
+    stand-in, so the fused plan takes this tagger unchanged.
     """
 
     def __init__(self, spans_checkpoint: str, types_checkpoint: str,

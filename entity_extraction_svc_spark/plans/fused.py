@@ -1,12 +1,10 @@
 """Fused pipeline: extract -> chunk -> NER -> link in ONE mapInPandas pass.
 
 Every stage of the KG pipeline up to linking is per-document work (the
-reference processes each request doc independently end-to-end), so the
-staged plan's shuffles — the offset-shift window, the mention/chunk cogroup
-exchange — exist only because the stages were materialized as separate
-tables.  This plan fuses them into a single narrow ``mapInPandas`` over the
-pages scan: zero shuffles until the final triples aggregation, no chunk
-cache, one Arrow round trip per input split.
+reference processes each request doc independently end-to-end), so one
+narrow ``mapInPandas`` over the pages scan runs them all: no offset-shift
+window, no mention/chunk regrouping by url, zero shuffles until the final
+triples aggregation, one Arrow round trip per input split.
 
 At 100 TB this is the difference between shuffling the full chunked corpus
 twice and never shuffling document payloads at all: the only wide exchanges
@@ -20,8 +18,10 @@ once per KB and reused by every later plan over the same KB files
 (``kb_broadcasts``), so a resume round or streaming micro-batch pays only
 for its own slice.
 
-The staged plan (plans/pipeline.py) remains the testing/debugging surface;
-both produce identical linked rows (asserted by tests/test_fused.py).
+This is the only path from pages to mentions, linked rows and triples:
+``fused_mentions`` runs the same per-batch loop as ``fused_link`` and stops
+before the linker, and plans/pipeline.py assembles both into the named
+artifacts the tests and the ``__spark_entry__`` kg_* rows read.
 """
 
 from __future__ import annotations
@@ -55,8 +55,8 @@ from entity_extraction_svc_spark.sources.kb import (
 
 
 def _fine_tag_lookup(gaz_rows: list[dict]) -> dict[str, str]:
-    """norm surface -> fine tag of the most popular owner (the broadcast twin
-    of eltags.classify_tags' max_by join)."""
+    """norm surface -> fine tag of the most popular owner (max num_rels;
+    the first row wins a tie)."""
     best: dict[str, tuple[int, str]] = {}
     for r in gaz_rows:
         k = normalize_label(r["surface"])
@@ -70,7 +70,9 @@ def _chunk_doc_for_tagging(text: str, texts_flat: list[str],
                            subword_len=None):
     """Chunk one doc, append the (soft-hyphen-stripped) chunk texts to the
     batch-wide ``texts_flat`` accumulator, and return per-chunk metadata
-    (flat index, doc offset shift, sentences, sentence offsets)."""
+    (flat index, doc offset shift, sentences, sentence offsets).  The shift
+    is the running sum of ``len(chunk) + 1`` over the doc's earlier chunks
+    (N6, ner_chunker.py:333-341)."""
     metas = []
     shift = 0
     for chunk_text, sents, soffs in chunk_doc(text, subword_len):
@@ -80,9 +82,10 @@ def _chunk_doc_for_tagging(text: str, texts_flat: list[str],
     return metas
 
 
-def _assemble_doc(d, tagger, fine_lookup, url, text, metas, tagged,
+def _doc_mentions(tagger, fine_lookup, url, metas, tagged,
                   lang: str = "en") -> list[dict]:
-    """Decode the tagged chunks of one doc and link it (N4-N8, G-R-P).
+    """Decode the tagged chunks of one doc into doc-level mention rows
+    (N4-N8 + the fine-tag lookup), sorted by (start, end, substr).
 
     A two-headed tagger (SPARK_KG_MODEL=gazetteer2 / hf2) decodes through
     merge_markups — the fine tag (or MISC after the 0.88 gate) comes from
@@ -92,9 +95,7 @@ def _assemble_doc(d, tagger, fine_lookup, url, text, metas, tagged,
 
     two_headed = hasattr(tagger, "fine_tags")
     mentions: list[dict] = []
-    sentences: list[str] = []
-    sentences_offsets: list[tuple[int, int]] = []
-    for ti, shift, sents, soffs in metas:
+    for ti, shift, _sents, _soffs in metas:
         if two_headed:
             for substr, start, end, proba, fine, coarse in decode_two_headed(
                 tagged[ti], tagger, lang=lang
@@ -116,12 +117,22 @@ def _assemble_doc(d, tagger, fine_lookup, url, text, metas, tagged,
                     "fine_tag": fine,
                     "alt_tag": ALT_FINE.get(fine or "", "MISC") if fine else "MISC",
                 })
+    mentions.sort(key=lambda m: (m["start"], m["end"], m["substr"]))
+    return mentions
+
+
+def _assemble_doc(d, tagger, fine_lookup, url, text, metas, tagged,
+                  lang: str = "en") -> list[dict]:
+    """Decode the tagged chunks of one doc and link it (N4-N8, G-R-P)."""
+    mentions = _doc_mentions(tagger, fine_lookup, url, metas, tagged, lang)
+    if not mentions:
+        return []
+    sentences: list[str] = []
+    sentences_offsets: list[tuple[int, int]] = []
+    for _ti, shift, sents, soffs in metas:
         for sent, (s, e) in zip(sents, soffs):
             sentences.append(sent)
             sentences_offsets.append((s + shift, e + shift))
-    if not mentions:
-        return []
-    mentions.sort(key=lambda m: (m["start"], m["end"], m["substr"]))
     return link_doc(d, text, sentences, sentences_offsets, mentions, lang)
 
 
@@ -138,56 +149,88 @@ def link_page(d, tagger, fine_lookup: dict[str, str],
     return _assemble_doc(d, tagger, fine_lookup, url, text, metas, tagged, lang)
 
 
-def fused_link(pages: DataFrame, tagger_bc, dicts_bc, fine_bc,
-               source: str = "html") -> DataFrame:
-    """pages -> linked rows, one narrow mapInPandas (no shuffle).
-
-    Model work is batched ACROSS documents: every chunk text of the Arrow
-    batch goes through ONE ``tag_batch`` call (a real checkpoint sees one
-    padded forward per Arrow batch, not one per chunk or per doc — the
-    tag_batch protocol of operators/tagger.py).
-    """
+def _payloads(pages: DataFrame, source: str) -> DataFrame:
+    """(url, payload, lang): the only columns the pass reads, so the scan
+    prunes everything else."""
     lang_col = (F.col("lang") if "lang" in pages.columns
                 else F.lit("en")).alias("lang")
-    if source == "html":
-        cols = pages.select("url", F.col("html").alias("payload"), lang_col)
-    else:
-        cols = pages.select("url", F.col("text").alias("payload"), lang_col)
+    payload = "html" if source == "html" else "text"
+    return pages.select("url", F.col(payload).alias("payload"), lang_col)
+
+
+def _tagged_batches(batches: Iterator[pd.DataFrame], tagger,
+                    source: str) -> Iterator[tuple[list, list]]:
+    """Per Arrow batch of (url, payload, lang): extract and chunk every doc,
+    then tag ALL the batch's chunk texts in ONE ``tag_batch`` call (a real
+    checkpoint sees one padded forward per Arrow batch, not one per chunk or
+    per doc — the tag_batch protocol of operators/tagger.py).  Yields
+    ``(docs, tagged)`` with docs as (url, text, lang, chunk metas); a null
+    payload or an empty text yields no doc."""
+    # N2: a real tagger's tokenizer drives the 300-subword chunk budget
+    slen = getattr(tagger, "subword_len", None)
+    for pdf in batches:
+        docs: list[tuple[str, str, str, list]] = []
+        texts_flat: list[str] = []
+        for url, payload, lang in zip(pdf["url"], pdf["payload"], pdf["lang"]):
+            if payload is None:
+                continue
+            if source == "html":
+                text = htmltext.preprocess_html(payload)
+            else:
+                text = htmltext.preprocess_text(payload)
+            if not text:
+                continue
+            docs.append((url, text, lang or "en",
+                         _chunk_doc_for_tagging(text, texts_flat, slen)))
+        yield docs, tagger.tag_batch(texts_flat)
+
+
+MENTIONS_SCHEMA = (
+    "url string, substr string, start int, end int, proba double, "
+    "tag string, fine_tag string, alt_tag string"
+)
+_MENTION_COLS = ["url", "substr", "start", "end", "proba", "tag", "fine_tag",
+                 "alt_tag"]
+_LINKED_COLS = ["url", "mention_id", "substr", "start", "end", "rank", "qid",
+                "conf", "page", "ent_tag", "substr_score", "num_rels",
+                "conn_score_notag", "conn_score_tag"]
+
+
+def fused_mentions(pages: DataFrame, tagger_bc, fine_bc,
+                   source: str = "html") -> DataFrame:
+    """pages -> doc-level mention rows, one narrow mapInPandas (no shuffle):
+    the same extract, chunk, tag and decode as ``fused_link``, stopping
+    before the linker."""
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tagger = tagger_bc.value
+        fine_lookup: dict[str, str] = fine_bc.value
+        for docs, tagged in _tagged_batches(batches, tagger, source):
+            rows: list[dict] = []
+            for url, _text, lang, metas in docs:
+                rows.extend(_doc_mentions(tagger, fine_lookup, url, metas,
+                                          tagged, lang))
+            yield pd.DataFrame(rows, columns=_MENTION_COLS)
+
+    return _payloads(pages, source).mapInPandas(_run, MENTIONS_SCHEMA)
+
+
+def fused_link(pages: DataFrame, tagger_bc, dicts_bc, fine_bc,
+               source: str = "html") -> DataFrame:
+    """pages -> linked rows, one narrow mapInPandas (no shuffle)."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         d = dicts_bc.value
         tagger = tagger_bc.value
-        # N2: a real tagger's tokenizer drives the 300-subword chunk budget
-        slen = getattr(tagger, "subword_len", None)
         fine_lookup: dict[str, str] = fine_bc.value
-        out_cols = ["url", "mention_id", "substr", "start", "end", "rank", "qid",
-                    "conf", "page", "ent_tag", "substr_score", "num_rels",
-                    "conn_score_notag", "conn_score_tag"]
-        for pdf in batches:
-            docs: list[tuple[str, str, str, list]] = []
-            texts_flat: list[str] = []
-            for url, payload, lang in zip(pdf["url"], pdf["payload"],
-                                          pdf["lang"]):
-                if payload is None:
-                    continue
-                if source == "html":
-                    text = htmltext.preprocess_html(payload)
-                else:
-                    text = htmltext.preprocess_text(payload)
-                if not text:
-                    continue
-                docs.append((url, text, lang or "en",
-                             _chunk_doc_for_tagging(text, texts_flat, slen)))
-            tagged = tagger.tag_batch(texts_flat)  # one model call per batch
+        for docs, tagged in _tagged_batches(batches, tagger, source):
             rows: list[dict] = []
             for url, text, lang, metas in docs:
-                rows.extend(
-                    _assemble_doc(d, tagger, fine_lookup, url, text, metas,
-                                  tagged, lang)
-                )
-            yield pd.DataFrame(rows, columns=out_cols)
+                rows.extend(_assemble_doc(d, tagger, fine_lookup, url, text,
+                                          metas, tagged, lang))
+            yield pd.DataFrame(rows, columns=_LINKED_COLS)
 
-    return cols.mapInPandas(_run, LINKED_SCHEMA)
+    return _payloads(pages, source).mapInPandas(_run, LINKED_SCHEMA)
 
 
 # The KB files the broadcast image is read from (kb_occ_labels is optional).

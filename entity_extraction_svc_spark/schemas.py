@@ -1,8 +1,11 @@
-"""Fixed StructType schemas for every stage of the pipeline.
+"""Fixed StructType schemas for the pipeline's tables.
 
 The reference is row-oriented and schemaless-in-code (positional ragged
-lists, SURVEY.md §1.1); here every stage boundary is a fixed schema so
-Catalyst can prune/push down and Arrow batches stay typed.
+lists, SURVEY.md §1.1); here the input, the triples, the KB tables and the
+lineage/metrics tables have fixed schemas so Catalyst can prune/push down
+and reads skip schema inference.  The mention and linked row schemas sit
+with the code that emits them (``plans.fused.MENTIONS_SCHEMA``,
+``operators.linker.LINKED_SCHEMA``).
 """
 
 from __future__ import annotations
@@ -27,67 +30,6 @@ PAGES = StructType(
         StructField("html", BinaryType(), True),
         StructField("text", StringType(), True),
         StructField("lang", StringType(), True),
-    ]
-)
-
-# ---- extracted text --------------------------------------------------------
-EXTRACTED = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
-)
-
-# ---- doc -> chunk explode (reference ner_chunker.py:67-179) ----------------
-SENT_OFFSET = StructType(
-    [StructField("s", IntegerType(), False), StructField("e", IntegerType(), False)]
-)
-CHUNKS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("chunk_id", IntegerType(), False),
-        StructField("chunk_text", StringType(), False),
-        StructField("sentences", ArrayType(StringType()), False),
-        StructField("sentences_offsets", ArrayType(SENT_OFFSET), False),
-    ]
-)
-
-# ---- mention rows (after NER decode + doc-offset merge) --------------------
-TAG_PROBA = StructType(
-    [StructField("proba", DoubleType(), False), StructField("tag", StringType(), False)]
-)
-MENTIONS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("mention_id", LongType(), False),
-        StructField("substr", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-        StructField("sent_id", IntegerType(), False),
-        StructField("tag", StringType(), False),
-        StructField("proba", DoubleType(), False),
-        StructField("tags_with_probas", ArrayType(TAG_PROBA), True),
-    ]
-)
-
-# ---- linked candidates (top-5 per mention) ---------------------------------
-LINKED = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("mention_id", LongType(), False),
-        StructField("substr", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-        StructField("rank", IntegerType(), False),
-        StructField("qid", StringType(), True),
-        StructField("conf", DoubleType(), True),
-        StructField("page", StringType(), True),
-        StructField("ent_tag", StringType(), True),
-        StructField("substr_score", DoubleType(), True),
-        StructField("num_rels", LongType(), True),
-        StructField("conn_score_notag", LongType(), True),
-        StructField("conn_score_tag", LongType(), True),
     ]
 )
 

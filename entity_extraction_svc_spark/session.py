@@ -1,9 +1,9 @@
 """SparkSession factory with the confs this pipeline relies on.
 
-Tuned for the pipeline's shape: Arrow-batched pandas UDF stages, two wide
-shuffles (groupBy url for doc-level linking; final repartition by subject
-hash), broadcast dimension joins, AQE for runtime re-planning and skew-join
-splitting at scale.
+Tuned for the pipeline's shape: Arrow-batched pandas UDF stages, wide
+shuffles only in the triples aggregation (distinct QIDs; final repartition
+by subject hash), broadcast dimension joins, AQE for runtime re-planning and
+skew-join splitting at scale.
 """
 
 from __future__ import annotations

@@ -111,7 +111,7 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
 def read_warc(spark: SparkSession, path_glob: str,
               lang: str = "en") -> DataFrame:
     """WARC files -> pages rows.  One file per task (binaryFile); the
-    output feeds ``build_fused``/``build_pipeline`` unchanged."""
+    output feeds ``build_fused`` and ``build_pipeline_df`` unchanged."""
     files = spark.read.format("binaryFile").load(path_glob).select(
         "path", "content"
     )

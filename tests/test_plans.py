@@ -55,11 +55,13 @@ def test_cosine_topk_plan(spark):
     assert "PushedFilters: [IsNotNull(vec_id), Not(EqualTo(vec_id,0))]" in plan
 
 
-def test_eltags_join_is_broadcast(spark, fixture_dir, pipeline):
-    """The gazetteer dimension join must stay broadcast (never sort-merge)."""
+def test_mentions_scan_prunes_columns(pipeline):
+    """The mentions artifact is the fused pass stopped before the linker:
+    it reads only (url, html, lang) and never shuffles (the fine-tag
+    lookup is a broadcast dict, not a join)."""
     plan = _plan(pipeline.mentions)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "ReadSchema: struct<url:string,html:binary,lang:string>" in plan
+    assert "Exchange" not in plan
 
 
 def test_minhash_is_shuffle_free(spark):

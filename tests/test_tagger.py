@@ -120,8 +120,9 @@ def test_soft_gazetteer_matches_hard():
 
 def test_soft_overrides_flow_through_spark(spark):
     """Synthetic borderline probabilities flow through the DISTRIBUTED
-    detect_mentions path and match the driver-side plain-Python decode."""
-    from entity_extraction_svc_spark.operators.ner import with_offset_shift
+    fused_mentions path and match the local plain-Python decode."""
+    from entity_extraction_svc_spark.functions.htmltext import preprocess_text
+    from entity_extraction_svc_spark.plans.fused import fused_mentions
 
     over = {
         "ambiguous": {"O": 0.79, "B-LOC": 0.15, "I-LOC": 0.06},  # forced B-LOC
@@ -132,22 +133,21 @@ def test_soft_overrides_flow_through_spark(spark):
         "the ambiguous borderline case appeared in reports yesterday",
         "Marie Curie saw the ambiguous sign",
     ]
-    chunks = spark.createDataFrame(
-        [(f"u{i}", 0, t) for i, t in enumerate(texts)],
-        "url string, chunk_id int, chunk_text string",
+    pages = spark.createDataFrame(
+        [(f"u{i}", t) for i, t in enumerate(texts)],
+        "url string, text string",
     )
-    from entity_extraction_svc_spark.operators.ner import detect_mentions
-
+    sc = spark.sparkContext
     got = {
         (r.url, r.substr, r.start, r.end, r.proba, r.tag)
-        for r in detect_mentions(
-            with_offset_shift(chunks), spark.sparkContext.broadcast(tagger)
-        ).collect()
+        for r in fused_mentions(pages, sc.broadcast(tagger), sc.broadcast({}),
+                                source="text").collect()
     }
     expect = set()
     for i, t in enumerate(texts):
+        # one short sentence is one chunk of the preprocessed text
         for substr, start, end, proba, tag in decode_tagged(
-            tagger.tag_batch([t])[0], tagger.tags_init
+            tagger.tag_batch([preprocess_text(t)])[0], tagger.tags_init
         ):
             expect.add((f"u{i}", substr, start, end, proba, tag))
     assert got == expect
@@ -420,32 +420,38 @@ def test_two_headed_pipeline_misc_gate(spark, fixture_dir):
     assert "louvre" not in got_spark
 
 
-def test_two_headed_staged_detect_mentions(spark, fixture_dir):
-    """The staged detect_mentions path accepts a two-headed tagger too
-    (coarse tag in the mention schema; fused/staged stay interchangeable)."""
-    from entity_extraction_svc_spark.operators.ner import (
-        detect_mentions,
-        with_offset_shift,
-    )
+def test_two_headed_fused_mentions(spark, fixture_dir):
+    """fused_mentions accepts a two-headed tagger: coarse tag from the
+    merge_markups decode, fine tag from the types head (no fine lookup),
+    equal to the local decode."""
     from entity_extraction_svc_spark.operators.tagger import (
         TwoHeadedGazetteerTagger,
+        decode_two_headed,
     )
+    from entity_extraction_svc_spark.plans.fused import fused_mentions
     from entity_extraction_svc_spark.sources.kb import read_dim_rows
 
     gaz_rows = read_dim_rows(spark, f"{fixture_dir}/gazetteer.parquet")
     tagger = TwoHeadedGazetteerTagger.from_rows(gaz_rows)
-    chunks = spark.createDataFrame(
-        [("u1", "en", 0, "The Mona Lisa is held at the Louvre in Paris.")],
-        "url string, lang string, chunk_id int, chunk_text string",
+    text = "The Mona Lisa is held at the Louvre in Paris."
+    pages = spark.createDataFrame(
+        [("u1", text, "en")], "url string, text string, lang string"
     )
+    sc = spark.sparkContext
     got = {
-        (r.substr, r.tag)
-        for r in detect_mentions(
-            with_offset_shift(chunks), spark.sparkContext.broadcast(tagger)
-        ).collect()
+        (r.substr, r.tag, r.fine_tag)
+        for r in fused_mentions(pages, sc.broadcast(tagger), sc.broadcast({}),
+                                source="text").collect()
     }
-    assert ("mona lisa", "WORK_OF_ART") in got
-    assert ("paris", "GPE") in got and ("louvre", "FAC") in got
+    expect = {
+        (substr, coarse, None if fine == "MISC" else fine)
+        for substr, _s, _e, _p, fine, coarse in decode_two_headed(
+            tagger.tag_batch([text])[0], tagger)
+    }
+    assert got == expect
+    got_coarse = {(substr, tag) for substr, tag, _fine in got}
+    assert ("mona lisa", "WORK_OF_ART") in got_coarse
+    assert ("paris", "GPE") in got_coarse and ("louvre", "FAC") in got_coarse
 
 
 def test_merge_markups_use_o_tag():

@@ -1,6 +1,7 @@
 """Local stand-in for the driver's correctness gate: run every queries()
-entry on Spark and its oracle_sql() on DuckDB, compare row count, schema
-width, and order-insensitive values (columns sorted by name)."""
+entry on Spark and its oracle_sql() on DuckDB, compare row count, column
+names, each column's numpy dtype kind, and order-insensitive values
+(columns sorted by name)."""
 
 from __future__ import annotations
 
@@ -23,6 +24,26 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """What differs between a Spark result and its oracle's; [] when they
+    match.  Dtype kinds are compared (int64 vs float64 fails, int32 vs
+    int64 passes), values exactly."""
+    a, b = normalize(sdf), normalize(odf)
+    if len(a) != len(b):
+        return [f"rowcount {len(a)} vs {len(b)}"]
+    if list(a.columns) != list(b.columns):
+        return [f"cols {list(a.columns)} vs {list(b.columns)}"]
+    status = [
+        f"dtype kind {c}: {a[c].dtype} vs {b[c].dtype}"
+        for c in a.columns if a[c].dtype.kind != b[c].dtype.kind
+    ]
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    except AssertionError as ex:
+        status.append(f"values differ: {str(ex)[:400]}")
+    return status
 
 
 def main(only: list[str] | None = None) -> int:
@@ -59,22 +80,12 @@ def main(only: list[str] | None = None) -> int:
             failures.append((name, f"ORACLE ERROR: {ex}"))
             print(f"FAIL {name}: oracle error {str(ex)[:300]}")
             continue
-        a, b = normalize(sdf), normalize(odf)
-        status = []
-        if len(a) != len(b):
-            status.append(f"rowcount {len(a)} vs {len(b)}")
-        if list(a.columns) != list(b.columns):
-            status.append(f"cols {list(a.columns)} vs {list(b.columns)}")
-        if not status:
-            try:
-                pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
-            except AssertionError as ex:
-                status.append(f"values differ: {str(ex)[:400]}")
+        status = compare(sdf, odf)
         if status:
             failures.append((name, "; ".join(status)))
             print(f"FAIL {name}: {'; '.join(status)}")
         else:
-            print(f"OK   {name}: {len(a)} rows ({time.time()-t0:.1f}s)")
+            print(f"OK   {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
     print(f"\n{len(failures)} failures")
     return 1 if failures else 0
 

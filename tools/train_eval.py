@@ -47,23 +47,18 @@ def learn_model(golden_mentions_train):
 
 def eval_f1(spark, pages_dev, golden_dev, gaz_rows) -> float:
     """Mention-level F1 of the real detection path on the dev split."""
-    from pyspark.sql import functions as F
-
-    from entity_extraction_svc_spark.operators.chunker import chunk
-    from entity_extraction_svc_spark.operators.extract import extract_text
-    from entity_extraction_svc_spark.operators.ner import (
-        detect_mentions,
-        with_offset_shift,
-    )
     from entity_extraction_svc_spark.operators.tagger import SoftGazetteerTagger
-
-    tagger_bc = spark.sparkContext.broadcast(
-        SoftGazetteerTagger.from_rows(gaz_rows)
+    from entity_extraction_svc_spark.plans.fused import (
+        _fine_tag_lookup,
+        fused_mentions,
     )
-    chunks = with_offset_shift(chunk(extract_text(pages_dev)))
+
+    sc = spark.sparkContext
+    tagger_bc = sc.broadcast(SoftGazetteerTagger.from_rows(gaz_rows))
+    fine_bc = sc.broadcast(_fine_tag_lookup(gaz_rows))
     pred = {
         (r.url, r.substr, r.start, r.end)
-        for r in detect_mentions(chunks, tagger_bc).collect()
+        for r in fused_mentions(pages_dev, tagger_bc, fine_bc).collect()
     }
     gold = {
         (r.url, r.substr, r.start, r.end) for r in golden_dev.collect()
