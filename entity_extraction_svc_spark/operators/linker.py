@@ -534,7 +534,9 @@ def calc_inters_scores(entity_sent_list, entity_tags_list, entities_found_inters
             cnts_tag_dict: dict = defaultdict(int)
             cnts_notag_dict: dict = defaultdict(int)
             found_inters_list = []
-            inters_set = entities_found_inters_list[i][entity]
+            # canonical order, not the reference's set order (COVERAGE R4):
+            # state carries between elements, so set order is hash-seeded
+            inters_set = sorted(entities_found_inters_list[i][entity], key=repr)
             for elem, entity_tag, entity_ind, entity_sent_num in inters_set:
                 if isinstance(elem, str):
                     found_inters_list.append([elem, entity_tag])
@@ -542,7 +544,8 @@ def calc_inters_scores(entity_sent_list, entity_tags_list, entities_found_inters
             for elem, entity_tag, entity_ind, entity_sent_num in inters_set:
                 if not isinstance(elem, str) and elem[0].startswith("P"):
                     found_inters_rel_dict[elem[0]].add((elem[1], entity_tag, entity_sent_num))
-            for rel, obj_list in found_inters_rel_dict.items():
+            for rel, obj_set in found_inters_rel_dict.items():
+                obj_list = sorted(obj_set, key=repr)
                 proc_obj_cnt_dict: dict = {}
                 same_sent = [o for o in obj_list if o[2] == entity_sent_list[i]]
                 if same_sent:

@@ -44,16 +44,18 @@ def materialize_triples(linked: DataFrame, kb_triples: DataFrame) -> DataFrame:
     kb_triples is the dimension side only in the lookup sense; at 10^12 docs
     the *distinct-QID* side is small (bounded by the KB), so the join is
     planned with the QID set broadcast against the (potentially huge) triple
-    store — a broadcast semi-join that never shuffles the triples.
+    store — a broadcast semi-join that never shuffles the triples.  The
+    distinct follows the subject repartition: its rows are already
+    clustered by ``subj``, so the plan has one exchange, not two.
     """
     qids = linked_qids(linked)
-    triples = (
+    return (
         kb_triples.filter(F.col("pred").isin(TRIPLE_WHITELIST))
         .join(F.broadcast(qids), kb_triples["subj"] == qids["qid"], "left_semi")
         .select("subj", "pred", "obj")
+        .repartition("subj")
         .distinct()
     )
-    return triples.repartition("subj")
 
 
 def write_triples_bucketed(triples: DataFrame, table_name: str,

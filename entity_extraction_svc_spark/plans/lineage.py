@@ -25,20 +25,29 @@ A ``max_docs`` slice is spread over the session's default parallelism
 before it is persisted: the limit yields a single partition, and the fused
 Python pass over it would otherwise run on one core.
 
-A round's commit costs what its slice costs: its tables are read with their
-declared schemas, and its ``n_triples`` counts only the triples it appended
-(the store total is ``read_triples(spark, out_dir).count()``).
+One commit, :func:`commit_slice`, serves batch rounds and streaming
+micro-batches, in three Spark actions: the collect of the round's metrics
+(it fills the slice, linked and lineage caches), the triples append and the
+lineage append (the commit point).  The snapshot manifest, the appended
+triples count and the metrics file are driver-side writes to the local
+filesystem, the stand-in for table-format commits, so ``out_dir`` must be a
+local path (a URI raises ``ValueError``).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import shutil
 import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from entity_extraction_svc_spark.plans.fused import build_fused
 from entity_extraction_svc_spark.schemas import LINEAGE, METRICS
@@ -79,13 +88,13 @@ def per_url_metrics(pages: DataFrame, linked: DataFrame, run_id: str) -> DataFra
     partition that carried the url, which is also the partition the fused
     pass linked it on; under a sort-merge join it is the url's shuffle
     partition.  Pages with zero mentions still get a lineage row (they are
-    processed — resume must skip them)."""
+    processed — resume must skip them).  ``link_doc`` emits one rank-0 row
+    per mention, so those rows count the mentions."""
+    rank0 = F.col("rank") == 0
     per_url = linked.groupBy("url").agg(
-        F.countDistinct("mention_id").alias("n_mentions"),
-        F.count(
-            F.when((F.col("rank") == 0) & F.col("qid").isNotNull(), 1)
-        ).alias("n_linked"),
-        F.max(F.when(F.col("rank") == 0, F.col("conf"))).alias("max_link_score"),
+        F.count(F.when(rank0, 1)).alias("n_mentions"),
+        F.count(F.when(rank0 & F.col("qid").isNotNull(), 1)).alias("n_linked"),
+        F.max(F.when(rank0, F.col("conf"))).alias("max_link_score"),
     )
     return (
         pages.select("url")
@@ -101,6 +110,62 @@ def per_url_metrics(pages: DataFrame, linked: DataFrame, run_id: str) -> DataFra
     )
 
 
+def _metric_rows(lineage: DataFrame) -> list:
+    """The per-(run_id, partition_id) metrics of ``lineage`` rows, collected
+    to the driver (at most one row per partition of a round)."""
+    return sorted(lineage.groupBy("run_id", "partition_id").agg(
+        F.count("*").alias("n_urls"),
+        F.sum("n_mentions").alias("n_mentions"),
+        F.sum("n_linked").alias("n_linked"),
+        F.max("max_link_score").alias("max_link_score"),
+    ).collect())
+
+
+def commit_slice(spark: SparkSession, pages: DataFrame, kb_dir: str,
+                 out_dir: str, run_id: str, source: str = "html") -> dict:
+    """The commit of a batch round and of a streaming micro-batch: repair
+    earlier runs' metrics, link ``pages``, then triples append, snapshot
+    manifest, lineage append (the commit point) and metrics, under
+    ``run_id``.  Returns ``run_id``, ``n_pages`` (the urls committed) and
+    ``n_triples`` (the distinct triples appended); an empty slice appends
+    nothing."""
+    repair_metrics(spark, out_dir)
+    # the slice is read by the fused pass and by the lineage rows: persist
+    # it so both see the same pages (a limit is re-evaluated lazily)
+    pages = pages.persist()
+    linked, triples = build_fused(spark, pages, kb_dir, source=source)
+    linked = linked.persist()
+    lineage = per_url_metrics(pages, linked, run_id).persist()
+    # the one action that fills the three caches.  It precedes the lineage
+    # append: lineage's plan holds the resume anti-join, and after the
+    # append and refresh an action would re-plan it and link the NEXT slice
+    metrics = _metric_rows(lineage)
+    n_pages = sum(r.n_urls for r in metrics)
+    n_triples = 0
+    if n_pages:
+        before = _parquet_files(triples_path(out_dir))
+        triples.write.mode("append").parquet(triples_path(out_dir))
+        added = sorted(_parquet_files(triples_path(out_dir)) - before)
+        _write_snapshot(out_dir, run_id, seq=len(_read_snapshots(out_dir)),
+                        files=added)
+        # materialize_triples applies distinct, so rows written = distinct
+        n_triples = sum(pq.read_metadata(f).num_rows for f in added)
+        # the lineage append is the COMMIT POINT: a crash above it leaves
+        # these urls uncommitted and the next resume reprocesses them (the
+        # duplicate triples dedupe on read; the snapshot is a phantom only
+        # its run_id reaches).  A crash after it leaves the run without
+        # metrics, which the next repair backfills: no url counts twice.
+        lineage.write.mode("append").parquet(lineage_path(out_dir))
+        # refresh the session's file listings so the next anti-join (and
+        # any open reader) sees this commit
+        spark.catalog.refreshByPath(lineage_path(out_dir))
+        spark.catalog.refreshByPath(triples_path(out_dir))
+        _write_metrics(spark, out_dir, metrics)
+    for df in (lineage, linked, pages):
+        df.unpersist()
+    return {"run_id": run_id, "n_pages": n_pages, "n_triples": n_triples}
+
+
 def run_checkpointed(
     spark: SparkSession,
     pages_path: str,
@@ -110,14 +175,15 @@ def run_checkpointed(
     max_docs: int | None = None,
     run_id: str | None = None,
 ) -> dict:
-    """One resumable pipeline run: process only urls absent from the lineage
-    table, append triples + lineage + per-partition metrics.
+    """One resumable pipeline run: :func:`commit_slice` the source pages
+    absent from the lineage table.
 
     ``max_docs`` bounds the slice (used by tests to simulate a run killed
     midway; a production run leaves it None).  Returns run stats;
-    ``n_triples`` is the distinct triples this round appended.
+    ``n_pages`` is the urls committed and ``n_triples`` the distinct
+    triples this round appended.
     """
-    run_id = run_id or new_run_id()
+    _require_local(out_dir)
     pages = spark.read.parquet(pages_path)
     done = processed_urls(spark, out_dir)
     if done is not None:
@@ -127,59 +193,8 @@ def run_checkpointed(
         # fused pass over it runs on every core
         pages = pages.limit(max_docs).repartition(
             spark.sparkContext.defaultParallelism)
-    # the slice is reused by three writes below — materialize it once so
-    # resume semantics don't race with the lazily re-evaluated limit
-    pages = pages.persist()
-    n_pages = pages.count()
-    if n_pages == 0:
-        pages.unpersist()
-        return {"run_id": run_id, "n_pages": 0, "n_triples": 0}
-
-    linked, triples = build_fused(spark, pages, kb_dir, source=source)
-    linked = linked.persist()
-
-    # materialize lineage BEFORE any append touches lineage_path: its plan
-    # contains the resume anti-join against that very path, so writing first
-    # and refreshing would invalidate the cache and re-plan against the
-    # post-append state (yielding an empty frame)
-    lineage = per_url_metrics(pages, linked, run_id).persist()
-    lineage.count()
-
-    def _triple_files() -> set[str]:
-        p = triples_path(out_dir)
-        if not os.path.isdir(p):
-            return set()
-        return {
-            os.path.join(p, f) for f in os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith("_")
-        }
-
-    before = _triple_files()
-    triples.write.mode("append").parquet(triples_path(out_dir))
-    added = sorted(_triple_files() - before)
-    _write_snapshot(out_dir, run_id, seq=len(_read_snapshots(out_dir)), files=added)
-    # materialize_triples applies distinct, so rows written = distinct triples
-    n_triples = sum(pq.read_metadata(f).num_rows for f in added)
-    # the lineage append is the COMMIT POINT: a crash anywhere above leaves
-    # these urls absent from lineage, so the next resume reprocesses them
-    # (triples are set-semantic, so the duplicate appends dedupe on read;
-    # a pre-commit snapshot is a phantom only reachable by its crashed
-    # run_id).  Metrics are written AFTER the commit, derived from the
-    # committed lineage via repair_metrics — a hard kill between the two
-    # appends can therefore never double-count a reprocessed url (the old
-    # metrics-first order did: metrics landed, lineage didn't, the urls
-    # were reprocessed under a new run_id and counted twice forever).
-    lineage.write.mode("append").parquet(lineage_path(out_dir))
-    # appended files are invisible to readers holding the session-shared
-    # FileStatusCache entry for these paths — refresh so the next resume's
-    # anti-join (and any open reader) sees this commit
-    spark.catalog.refreshByPath(lineage_path(out_dir))
-    spark.catalog.refreshByPath(triples_path(out_dir))
-    repair_metrics(spark, out_dir)
-    lineage.unpersist()
-    linked.unpersist()
-    pages.unpersist()
-    return {"run_id": run_id, "n_pages": n_pages, "n_triples": n_triples}
+    return commit_slice(spark, pages, kb_dir, out_dir, run_id or new_run_id(),
+                        source=source)
 
 
 def run_to_completion(spark: SparkSession, pages_path: str, kb_dir: str,
@@ -197,52 +212,75 @@ def run_to_completion(spark: SparkSession, pages_path: str, kb_dir: str,
 
 
 def repair_metrics(spark: SparkSession, out_dir: str) -> int:
-    """Backfill the metrics table for every committed run_id it is missing.
+    """Backfill the metrics rows of every committed run that has none.
 
-    Metrics are a pure aggregation of the lineage table, so any torn state
-    (a kill between the lineage commit and the metrics append) is
-    self-healing: the next run — or any direct call — recomputes exactly
-    the missing run_ids from committed lineage and appends them.  Metrics
-    run_ids are therefore always a subset of lineage run_ids, and a url
+    Metrics are a pure aggregation of committed lineage, written after the
+    commit point, so a torn state (a kill between a run's lineage append and
+    its metrics write) only leaves that run without metrics, and a url
     reprocessed after a crash is counted in exactly one committed run.
-    Returns the number of backfilled (run_id, partition_id) rows.  Lineage
-    is not partitioned by run_id, so the anti-join reads the run_id of every
-    lineage row (pruned to that column); only the aggregate is limited to
-    the missing runs' rows."""
-    # a missing table is an expected state (AnalysisException, like
-    # streaming/curate._read_store); anything else — a TRANSIENT read
-    # failure — must propagate: swallowing it would treat every committed
-    # run as missing and append duplicate metrics forever (append-mode
-    # writes have no undo).  Probed via spark.read, NOT os.path: the out
-    # dir may be s3/hdfs (runner's documented deployment), where a local
-    # isdir is always False and would silently disable metrics.  Public
-    # pyspark.errors.AnalysisException is the base both classic and
-    # connect sessions raise; the captured-module class is one subclass.
+
+    The candidates are the run_ids of the non-compaction snapshot manifests
+    minus the run_ids in the metrics table, both read on the driver from
+    small files.  On a consistent store there is none and the repair
+    launches no Spark job; otherwise it aggregates the candidates' lineage
+    rows and writes them as a round does.  A run killed before its lineage
+    commit has no rows and stays a candidate, so a store holding one pays a
+    filtered lineage scan in every later repair.  :func:`commit_slice` runs
+    the repair first, so the next round heals a torn state.  It assumes one
+    writer per ``out_dir``: a concurrent run between its lineage commit and
+    its metrics write would be counted twice.  Returns the number of
+    backfilled (run_id, partition_id) rows."""
+    runs = {s["run_id"] for s in _read_snapshots(out_dir)
+            if not s.get("compaction")}
+    missing = runs - _metrics_run_ids(out_dir)
+    if not missing:
+        return 0
+    # a missing lineage table is an expected state (nothing committed);
+    # any other read failure propagates
     try:
         lin = spark.read.schema(LINEAGE).parquet(lineage_path(out_dir))
     except AnalysisException:
         return 0
-    try:
-        have = spark.read.schema(METRICS).parquet(metrics_path(out_dir)) \
-            .select("run_id").distinct()
-        missing = lin.join(have, "run_id", "left_anti")
-    except AnalysisException:
-        missing = lin
-    # a few rows per run: AQE does not coalesce a cached plan's partitions,
-    # so without the coalesce the count and the append would each run
-    # spark.sql.shuffle.partitions tasks
-    metrics = missing.groupBy("run_id", "partition_id").agg(
-        F.count("*").alias("n_urls"),
-        F.sum("n_mentions").alias("n_mentions"),
-        F.sum("n_linked").alias("n_linked"),
-        F.max("max_link_score").alias("max_link_score"),
-    ).coalesce(1).persist()
-    n = metrics.count()
-    if n:
-        metrics.write.mode("append").parquet(metrics_path(out_dir))
-        spark.catalog.refreshByPath(metrics_path(out_dir))
-    metrics.unpersist()
-    return n
+    rows = _metric_rows(lin.filter(F.col("run_id").isin(sorted(missing))))
+    if rows:
+        _write_metrics(spark, out_dir, rows)
+    return len(rows)
+
+
+def _metrics_run_ids(out_dir: str) -> set[str]:
+    return {r for f in _parquet_files(metrics_path(out_dir))
+            for r in pq.read_table(f, columns=["run_id"])["run_id"].to_pylist()}
+
+
+def _write_metrics(spark: SparkSession, out_dir: str, rows: list) -> None:
+    """Append ``rows`` to the metrics table as one file written on the
+    driver.  It is written outside ``metrics/`` and renamed in, so a kill
+    leaves no partial file that a ``metrics/*.parquet`` reader would see."""
+    table = pa.Table.from_pylist([r.asDict() for r in rows],
+                                 schema=to_arrow_schema(METRICS))
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(out_dir, f"_tmp-{name}")
+    pq.write_table(table, tmp)
+    os.makedirs(metrics_path(out_dir), exist_ok=True)
+    os.replace(tmp, os.path.join(metrics_path(out_dir), name))
+    spark.catalog.refreshByPath(metrics_path(out_dir))
+
+
+def _require_local(out_dir: str) -> None:
+    """The manifests are local files: refuse a URI instead of writing a
+    literal ``s3:`` directory next to a half-committed round."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", out_dir):
+        raise ValueError(
+            f"out_dir {out_dir!r} is not a local path: snapshot manifests "
+            "and metrics are committed with local file operations")
+
+
+def _parquet_files(d: str) -> set[str]:
+    """The data files of a parquet directory (empty when it is absent)."""
+    if not os.path.isdir(d):
+        return set()
+    return {os.path.join(d, f) for f in os.listdir(d)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))}
 
 
 def vacuum_triples(spark: SparkSession, out_dir: str) -> dict:
@@ -268,12 +306,9 @@ def vacuum_triples(spark: SparkSession, out_dir: str) -> dict:
     snaps = _read_snapshots(out_dir)
     live: set[str] = set()
     for snap in snaps:
-        # liveness by BASENAME (part/compact file names embed a uuid, so
-        # basenames are unique): manifests record the path spelling of the
-        # run that wrote them, and comparing full strings against paths
-        # built from THIS call's out_dir argument (relative vs absolute,
-        # different cwd, symlinked mount) would make every committed file
-        # look orphaned — and vacuum deletes what looks orphaned
+        # liveness by BASENAME (file names embed a uuid): manifests carry
+        # the writing run's path spelling, and a different spelling of this
+        # out_dir would make every committed file look orphaned
         names = {os.path.basename(x) for x in snap["files"]}
         if snap.get("compaction"):
             live = names
@@ -304,8 +339,7 @@ def _write_snapshot(out_dir: str, run_id: str, seq: int, files: list[str],
     that run — the SURVEY §7.4 degradation path when no table format is
     available.  A ``compaction`` manifest REPLACES the file set accumulated
     so far (rewrite_data_files + expire_snapshots in one)."""
-    import json
-
+    _require_local(out_dir)
     os.makedirs(snapshots_path(out_dir), exist_ok=True)
     with open(os.path.join(snapshots_path(out_dir), f"{seq:06d}-{run_id}.json"), "w") as f:
         snap = {"run_id": run_id, "seq": seq, "files": sorted(files),
@@ -342,17 +376,9 @@ def compact_triples(spark: SparkSession, out_dir: str,
     docstring): under a real table format this whole function IS
     ``rewrite_data_files`` + ``expire_snapshots`` and the os calls become
     table commits."""
-    import shutil
-    import uuid
-
     p = triples_path(out_dir)
-    if not os.path.isdir(p):  # fresh/drained out dir: nothing to compact
-        return {"run_id": None, "files_before": 0, "files_after": 0}
-    old = {
-        os.path.join(p, f) for f in os.listdir(p)
-        if f.endswith(".parquet") and not f.startswith("_")
-    }
-    if not old:
+    old = _parquet_files(p)
+    if not old:  # fresh/drained out dir: nothing to compact
         return {"run_id": None, "files_before": 0, "files_after": 0}
     snaps = _read_snapshots(out_dir)
     seq = len(snaps)
@@ -410,16 +436,8 @@ def retract_triples(spark: SparkSession, out_dir: str,
     this whole function is a single MERGE/DELETE commit and the window
     disappears (the documented Iceberg swap-in point).
     """
-    import shutil
-    import uuid
-
     p = triples_path(out_dir)
-    if not os.path.isdir(p):
-        return {"run_id": None, "removed": 0}
-    old = {
-        os.path.join(p, f) for f in os.listdir(p)
-        if f.endswith(".parquet") and not f.startswith("_")
-    }
+    old = _parquet_files(p)
     if not old:
         return {"run_id": None, "removed": 0}
     keys = ["subj", "pred", "obj"]
@@ -471,8 +489,7 @@ def retract_triples(spark: SparkSession, out_dir: str,
 
 
 def _read_snapshots(out_dir: str) -> list[dict]:
-    import json
-
+    _require_local(out_dir)
     p = snapshots_path(out_dir)
     if not os.path.isdir(p):
         return []
@@ -511,14 +528,10 @@ def read_triples(spark: SparkSession, out_dir: str,
     if target_seq == latest_compact - 1:
         latest = next(s for s in snaps if s["seq"] == latest_compact)
         # the plain seq-1 redirect is only sound for true compactions
-        # (file rewrite, identical state); a RETRACTION commit changes
-        # state, so it carries its removed rows as a side parquet and the
-        # pre-retraction state reads as post-state ∪ removed — exact time
-        # travel through one retraction.  (Silently serving the
-        # post-retraction rows as the old state was the bug that made
-        # maintain_entailment's as-of diff see no removals and skip
-        # reconciliation; older retractions without the side file report
-        # expired.)
+        # (identical state); a RETRACTION commit changes state, so it
+        # carries its removed rows as a side parquet and the pre-retraction
+        # state reads as post-state ∪ removed (a retraction without the
+        # side file reports expired)
         if latest.get("retraction"):
             removed_files = list(latest.get("removed_files") or [])
             if not removed_files:

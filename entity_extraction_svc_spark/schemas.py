@@ -1,7 +1,7 @@
 """Fixed StructType schemas for the pipeline's tables.
 
 The reference is row-oriented and schemaless-in-code (positional ragged
-lists, SURVEY.md §1.1); here the input, the triples, the KB tables and the
+lists, SURVEY.md §1.1); here the input, the triples and the
 lineage/metrics tables have fixed schemas so Catalyst can prune/push down
 and reads skip schema inference.  The mention and linked row schemas sit
 with the code that emits them (``plans.fused.MENTIONS_SCHEMA``,
@@ -11,7 +11,6 @@ with the code that emits them (``plans.fused.MENTIONS_SCHEMA``,
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -39,31 +38,6 @@ TRIPLES = StructType(
         StructField("subj", StringType(), False),
         StructField("pred", StringType(), False),
         StructField("obj", StringType(), False),
-    ]
-)
-
-# ---- KB tables (FIXTURES.md §2; mirrors src/queries.py:2-4 + pickle dicts) --
-KB_ENTITIES = StructType(
-    [
-        StructField("qid", StringType(), False),
-        StructField("label", StringType(), False),
-        StructField("num_rels", LongType(), False),
-        StructField("tag", StringType(), False),
-        StructField("page", StringType(), True),
-        StructField("descr", StringType(), True),
-        StructField("p31", ArrayType(StringType()), True),
-        StructField("p131", ArrayType(StringType()), True),
-        StructField("p641", ArrayType(StringType()), True),
-        StructField("image_link", StringType(), True),
-        StructField("categories", ArrayType(StringType()), True),
-        StructField("dbpedia_types", ArrayType(StringType()), True),
-    ]
-)
-KB_ALIASES = StructType(
-    [
-        StructField("alias", StringType(), False),
-        StructField("qid", StringType(), False),
-        StructField("name_or_alias", StringType(), False),
     ]
 )
 

@@ -43,6 +43,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no stage progress bar on stderr: it shares a line with whatever a
+        # tool prints next (check_contract's OK/FAIL verdicts)
+        .config("spark.ui.showConsoleProgress", "false")
         # bucketed tables (co-located joins) land outside the repo tree
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE",
@@ -62,9 +65,6 @@ def _ship_package(spark: SparkSession) -> None:
     the in-process equivalent of ``spark-submit --py-files pkg.zip`` (north
     rule deployment mode).  Without it, pandas-UDF closures referencing the
     package fail to unpickle on workers launched outside the repo root."""
-    import shutil
-    import tempfile
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     # real spark-submit --py-files mode: the package is imported FROM the
     # shipped zip (pkg_dir like /tmp/pkg.zip/entity_extraction_svc_spark),
@@ -72,18 +72,33 @@ def _ship_package(spark: SparkSession) -> None:
     # zip — re-shipping is both impossible and unnecessary
     if not os.path.isdir(pkg_dir):
         return
-    zip_base = os.path.join(tempfile.gettempdir(), "entity_extraction_svc_spark_pkg")
-    zip_path = zip_base + ".zip"
-    py_mtimes = [
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    ]
-    if not py_mtimes:
-        return
-    src_mtime = max(py_mtimes)
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < src_mtime:
-        shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir),
-                            os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(zip_path)
+    zip_path = _package_zip(pkg_dir)
+    if zip_path:
+        spark.sparkContext.addPyFile(zip_path)
+
+
+def _package_zip(pkg_dir: str) -> str | None:
+    """The zip of the package tree at ``pkg_dir``, named by a hash of the
+    paths and contents of its ``.py`` files: two checkouts sharing one temp
+    dir never ship each other's code.  None when there is no ``.py`` file."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    sources = sorted(os.path.join(root, f) for root, _, files in os.walk(pkg_dir)
+                     for f in files if f.endswith(".py"))
+    if not sources:
+        return None
+    h = hashlib.sha256()
+    for path in sources:
+        with open(path, "rb") as fh:
+            h.update(path.encode() + b"\0" + fh.read() + b"\0")
+    zip_base = os.path.join(tempfile.gettempdir(),
+                            f"entity_extraction_svc_spark_pkg-{h.hexdigest()[:16]}")
+    if not os.path.exists(zip_base + ".zip"):
+        # built under a private name and renamed in whole: a concurrent
+        # process never ships a half-written zip
+        tmp = shutil.make_archive(f"{zip_base}-{os.getpid()}", "zip",
+                                  os.path.dirname(pkg_dir), os.path.basename(pkg_dir))
+        os.replace(tmp, zip_base + ".zip")
+    return zip_base + ".zip"

@@ -4,8 +4,12 @@ The reference is request/response (no stream semantics, SURVEY.md §2.10);
 at corpus scale the natural streaming shape is *incremental ingestion*: new
 WARC page files land in a directory (or an Iceberg snapshot), a file-source
 stream picks them up, and each micro-batch runs the SAME fused batch plan
-via ``foreachBatch`` — so streaming and batch share one implementation and
-one output layout (triples + lineage appends, per plans/lineage.py).
+via ``foreachBatch`` and commits it with the batch rounds' own commit,
+``plans.lineage.commit_slice``, under run_id ``stream-<batch_id>`` — so
+streaming and batch share one implementation and one output layout: triples
+append, snapshot manifest (``read_triples(as_of="stream-<batch_id>")``
+time-travels to it), lineage append, metrics rows, and the metrics repair
+that heals a torn earlier commit.
 
 ``trigger(availableNow=True)`` drains the backlog and stops — the
 catch-up/resume mode; a production deployment leaves the default trigger
@@ -39,25 +43,14 @@ def stream_pages(spark: SparkSession, src_dir: str) -> DataFrame:
 def ingest_stream(spark: SparkSession, src_dir: str, kb_dir: str, out_dir: str,
                   checkpoint_dir: str, source: str = "html",
                   available_now: bool = True):
-    """Stream pages -> fused link -> triples + lineage appends per batch.
+    """Stream pages -> one ``commit_slice`` per micro-batch.
 
     Returns the started StreamingQuery; callers awaitTermination()."""
     from entity_extraction_svc_spark.plans import lineage as L
-    from entity_extraction_svc_spark.plans.fused import build_fused
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = batch_df.persist()
-        linked, triples = build_fused(spark, batch_df, kb_dir, source=source)
-        linked = linked.persist()
-        lineage = L.per_url_metrics(batch_df, linked, run_id=f"stream-{batch_id}")
-        triples.write.mode("append").parquet(L.triples_path(out_dir))
-        lineage.write.mode("append").parquet(L.lineage_path(out_dir))
-        spark.catalog.refreshByPath(L.triples_path(out_dir))
-        spark.catalog.refreshByPath(L.lineage_path(out_dir))
-        linked.unpersist()
-        batch_df.unpersist()
+        L.commit_slice(spark, batch_df, kb_dir, out_dir,
+                       run_id=f"stream-{batch_id}", source=source)
 
     writer = (
         stream_pages(spark, src_dir)

@@ -79,3 +79,47 @@ def test_sql_api_surface(spark, pipeline, fixture_dir):
         "PER", "CITY", "COUNTRY", "ORG", "BUSINESS", "FAC", "WORK_OF_ART",
         "LITERARY_WORK", "FILM", "SONG", "PRODUCT",
     }
+
+
+_LINK_PAGES = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import pyarrow.parquet as pq
+from entity_extraction_svc_spark.functions import htmltext
+from entity_extraction_svc_spark.operators.tagger import load_tagger
+from entity_extraction_svc_spark.plans import fused
+from entity_extraction_svc_spark.sources.kb import collect_linker_dicts
+kb = sys.argv[2]
+gaz = pq.read_table(f"{kb}/gazetteer.parquet").to_pylist()
+tagger = load_tagger(gaz)
+d = collect_linker_dicts(None, kb)
+rows = []
+for p in pq.read_table(f"{kb}/pages.parquet").to_pylist():
+    if p["url"].endswith(("/00000001", "/00000021")):
+        text = htmltext.preprocess_html(p["html"])
+        rows += fused.link_page(d, tagger, fused._fine_tag_lookup(gaz),
+                                p["url"], text, p["lang"] or "en")
+print(json.dumps(rows, sort_keys=True))
+"""
+
+
+def test_conn_scores_do_not_depend_on_the_hash_seed(fixture_dir):
+    """``link_page`` gives identical rows, connection scores included,
+    under two ``PYTHONHASHSEED`` values (the driver-side linker gets a
+    random seed unless one is set).  The two pages are ones whose scores
+    moved with the seed while the connection scoring walked Python sets."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = []
+    for seed in ("1", "2"):
+        p = subprocess.run(
+            [sys.executable, "-c", _LINK_PAGES, repo, fixture_dir],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True, text=True, check=True)
+        out.append(json.loads(p.stdout))
+    assert out[0] and out[0] == out[1]
+    assert any(r["conn_score_notag"] for r in out[0])

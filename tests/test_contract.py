@@ -4,6 +4,8 @@ through tools/check_contract.compare, the compare of the full local sweep
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -64,3 +66,33 @@ def test_prep_logs_a_failed_ship(monkeypatch, caplog):
         entry_mod._prep(not_a_session)
     entry_mod._SHIPPED.discard(id(not_a_session))
     assert "RuntimeError: addPyFile refused" in caplog.text
+
+
+def test_each_checkout_ships_its_own_package_zip(monkeypatch, tmp_path):
+    """Two package trees under one temp dir get two zips, each holding its
+    own code, even when the second tree's files are older than the first
+    zip; an unchanged tree reuses its zip and an edited one gets a new one."""
+    import tempfile
+    import zipfile
+
+    from entity_extraction_svc_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    pkgs = []
+    for name in ("a", "b"):
+        pkg = tmp_path / name / "entity_extraction_svc_spark"
+        pkg.mkdir(parents=True)
+        (pkg / "__init__.py").write_text(f"CHECKOUT = {name!r}\n")
+        pkgs.append(pkg)
+    os.utime(pkgs[1] / "__init__.py", (946684800, 946684800))  # year 2000
+
+    zips = [session._package_zip(str(p)) for p in pkgs]
+    assert zips[0] != zips[1]
+    for name, z in zip("ab", zips):
+        with zipfile.ZipFile(z) as zf:
+            assert zf.read("entity_extraction_svc_spark/__init__.py") == \
+                f"CHECKOUT = {name!r}\n".encode()
+    assert session._package_zip(str(pkgs[0])) == zips[0]
+    (pkgs[0] / "__init__.py").write_text("CHECKOUT = 'a2'\n")
+    assert session._package_zip(str(pkgs[0])) not in zips

@@ -384,3 +384,105 @@ def test_max_docs_round_links_on_every_core(spark, fixture_dir, monkeypatch):
     met = spark.read.parquet(L.metrics_path(out))
     assert met.agg(F.sum("n_urls")).first()[0] == 60
     assert len(glob.glob(os.path.join(L.metrics_path(out), "*.parquet"))) == 1
+
+
+def _jobs_in(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return (its result, the Spark
+    jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repair_metrics_on_a_consistent_store_runs_no_job(spark, fixture_dir):
+    """Every committed run has metrics, so the repair decides from the
+    manifests and the metrics files alone and launches no Spark job; with
+    a run's metrics gone it aggregates that run's lineage and writes them
+    back."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = tempfile.mkdtemp(prefix="kg_repair_jobs_")
+    pages_path = f"{fixture_dir}/pages.parquet"
+    s1 = L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
+    L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
+    n, jobs = _jobs_in(spark, "repair-consistent",
+                       lambda: L.repair_metrics(spark, out))
+    assert (n, jobs) == (0, 0)
+
+    met = spark.read.parquet(L.metrics_path(out))
+    run1 = [r.asDict() for r in met.filter(F.col("run_id") == s1["run_id"])
+            .orderBy("partition_id").collect()]
+    for f in glob.glob(os.path.join(L.metrics_path(out), "*.parquet")):
+        if pq.read_table(f, columns=["run_id"])["run_id"][0].as_py() == s1["run_id"]:
+            os.remove(f)
+    spark.catalog.refreshByPath(L.metrics_path(out))
+    n, jobs = _jobs_in(spark, "repair-torn", lambda: L.repair_metrics(spark, out))
+    assert n == len(run1) and jobs > 0
+    met = spark.read.parquet(L.metrics_path(out))
+    assert [r.asDict() for r in met.filter(F.col("run_id") == s1["run_id"])
+            .orderBy("partition_id").collect()] == run1
+
+
+def test_batch_rounds_and_stream_batches_share_one_commit(spark, fixture_dir):
+    """A batch round, a streaming micro-batch and a second batch round in
+    one out dir: time travel to the last commit reads the current state,
+    and every run, the stream's included, has manifests and metrics."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from entity_extraction_svc_spark.streaming.ingest import ingest_stream
+
+    out = tempfile.mkdtemp(prefix="kg_mixed_")
+    pages_path = f"{fixture_dir}/pages.parquet"
+    L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=100)
+
+    done = set(pq.read_table(L.lineage_path(out), columns=["url"])["url"]
+               .to_pylist())
+    pages = pq.read_table(pages_path)
+    todo = [i for i, u in enumerate(pages["url"].to_pylist()) if u not in done]
+    src = tempfile.mkdtemp(prefix="kg_mixed_src_")
+    pq.write_table(pages.take(todo[:60]), os.path.join(src, "part-0.parquet"))
+    ingest_stream(spark, src, fixture_dir, out,
+                  tempfile.mkdtemp(prefix="kg_mixed_ckpt_")).awaitTermination(300)
+
+    last = L.run_checkpointed(spark, pages_path, fixture_dir, out)
+    assert last["n_pages"] == 206 - 160
+
+    def rows(df):
+        return {(r.subj, r.pred, r.obj) for r in df.collect()}
+
+    assert rows(L.read_triples(spark, out, as_of=last["run_id"])) == \
+        rows(L.read_triples(spark, out))
+    lin = spark.read.parquet(L.lineage_path(out))
+    met = spark.read.parquet(L.metrics_path(out))
+    lin_ids = {r.run_id for r in lin.select("run_id").distinct().collect()}
+    met_ids = {r.run_id for r in met.select("run_id").distinct().collect()}
+    assert met_ids == lin_ids and "stream-0" in met_ids and len(met_ids) == 3
+    assert met.agg(F.sum("n_urls")).first()[0] == 206
+
+
+def test_a_uri_out_dir_is_refused(spark, fixture_dir):
+    """The manifests and the metrics are local files: a URI out dir raises
+    before the round links anything, instead of writing a literal ``s3:``
+    directory."""
+    import os
+
+    import pytest
+
+    cwd = os.getcwd()
+    os.chdir(tempfile.mkdtemp(prefix="kg_uri_"))
+    try:
+        with pytest.raises(ValueError, match="not a local path"):
+            L.run_checkpointed(spark, f"{fixture_dir}/pages.parquet",
+                               fixture_dir, "s3://bucket/kg", max_docs=10)
+        assert os.listdir(".") == []
+    finally:
+        os.chdir(cwd)
