@@ -1,13 +1,15 @@
-"""Round-6 isolation harness (optimization guide §1.4/§1.5).
+"""Per-stage isolation harness beside the frozen bench.py.
 
-bench.py is FROZEN for measurement; this file exists so per-stage noop-sink
-timings and plan captures can be cited in OPTIMIZATION_r06.md without
-touching the frozen harness.  Per query it books:
+bench.py is FROZEN for measurement; this file books per-stage noop-sink
+timings and plan captures without touching it.  Per stage it prints the
+min-of-N wall time (same protocol as bench.py) and, in the JSON line, every
+run's time:
 
-* min-of-N wall time of the full query (same protocol as bench.py), and
-* noop-sink timings of the query's internal stages, so a change can be
-  attributed to the stage it touched (e.g. "the inverted-index self-join,
-  not the shingling, is the 90% of dedup_ngram_jaccard").
+* full-query twins of the bench queries, and
+* noop-sink timings of their internal stages and of every consumer of the
+  tokenizer pass (``dedup.token_rows``), so a change can be attributed to
+  the stage it touched (e.g. "the inverted-index self-join, not the
+  shingling, is the 90% of dedup_ngram_jaccard").
 
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [stage ...]
@@ -35,18 +37,19 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _timed(spark, results: dict, name: str, fn, repeats: int = REPEATS):
-    best = None
+def _timed(spark, results: dict, runs: dict, name: str, fn,
+           repeats: int = REPEATS):
+    secs = []
     for _ in range(repeats):
         spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(name)
         t0 = time.time()
         fn()
-        sec = time.time() - t0
-        best = sec if best is None else min(best, sec)
+        secs.append(round(time.time() - t0, 3))
     spark.sparkContext.setJobDescription(None)
-    results[name] = round(best, 3)
-    print(f"{name}: {best:.3f}s", flush=True)
+    results[name] = min(secs)
+    runs[name] = secs
+    print(f"{name}: {min(secs):.3f}s", flush=True)
 
 
 def stage_fns(spark, sf_dir: str):
@@ -55,9 +58,15 @@ def stage_fns(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from entity_extraction_svc_spark.operators import dedup as dd
+    from entity_extraction_svc_spark.operators import lm
+    from entity_extraction_svc_spark.operators.decontam import contamination
+    from entity_extraction_svc_spark.operators.embed import hash_embed
     from entity_extraction_svc_spark.operators.packing import pack_sequences
     from entity_extraction_svc_spark.operators.simsearch import cosine_topk
-    from entity_extraction_svc_spark.operators.textstats import doc_stats
+    from entity_extraction_svc_spark.operators.textstats import (
+        doc_stats,
+        repetition_stats,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -93,6 +102,27 @@ def stage_fns(spark, sf_dir: str):
     fns["minhash_sigs"] = minhash_sigs
     fns["minhash_bands"] = minhash_bands
     fns["minhash_full"] = minhash_full
+
+    # ---- tokenizer-pass consumers, noop sink -------------------------
+    # (shingle_set_rows is ngram_shingle, minhash_signatures minhash_sigs)
+    # the eval set of the doc_perplexity query's decontam part
+    ev = docs.filter(F.col("doc_id") % 97 == 0).select(
+        F.substring(dd._norm_text("text"), 1, 240).alias("text"))
+
+    def train_bigram_lm():
+        for t in lm.train_bigram_lm(docs):
+            noop(t)
+
+    fns["substring_windows"] = lambda: noop(dd.substring_windows(docs))
+    fns["strip_dup_spans"] = lambda: noop(dd.strip_dup_spans(docs))
+    fns["winnow_fingerprints"] = lambda: noop(
+        dd.winnow_fingerprints(docs, k=6, w=4))
+    fns["simhash"] = lambda: noop(dd.simhash(docs))
+    fns["contamination"] = lambda: noop(contamination(docs, ev, n=8))
+    fns["repetition_stats"] = lambda: noop(repetition_stats(docs))
+    fns["hash_embed"] = lambda: noop(hash_embed(docs, dim=16))
+    fns["train_bigram_lm"] = train_bigram_lm
+    fns["train_trigram_lm"] = lambda: noop(lm.train_trigram_lm(docs)[2])
 
     # ---- the small queries, full twins -------------------------------
     fns["doc_stats_full"] = lambda: doc_stats(docs).count()
@@ -144,9 +174,11 @@ def main() -> None:
     fns = stage_fns(spark, SF_DIR)
     wanted = sys.argv[1:] or list(fns)
     results: dict = {}
+    runs: dict = {}
     for name in wanted:
-        _timed(spark, results, name, fns[name])
-    print(json.dumps({"sf_dir": SF_DIR, "stages": results}))
+        _timed(spark, results, runs, name, fns[name])
+    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "stages": results,
+                      "runs": runs}))
 
 
 if __name__ == "__main__":

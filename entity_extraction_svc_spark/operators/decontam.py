@@ -9,16 +9,17 @@ with any eval document.
 
 Scale shape: the eval side is always small (benchmarks are 10^3-10^5
 rows), the corpus side is the 100 TB one.  So the corpus is NEVER
-shuffled: eval n-grams are collected into a distinct set and
-broadcast-joined against the exploded corpus n-grams; the per-document
-overlap count is a map-side-combinable groupBy on ``doc_id``.  The plan is
-scan -> generate n-grams (zip_with over shifted slices, row-local) ->
+shuffled on the gram: eval n-grams are collected into a distinct set and
+broadcast-joined against the corpus n-grams; the per-document overlap
+count is a map-side-combinable groupBy on ``doc_id``.  The plan is
+scan -> tokenizer pass (each document's distinct n-grams, row-local) ->
 broadcast semi-join -> partial agg: one narrow shuffle of the (tiny)
 surviving matches only.
 
-Tokenization and n-gram construction reuse the dedup module's normalized
-shingles (``operators/dedup.py:with_shingles``) so contamination, MinHash
-and Jaccard all agree on what "the same n-gram" means.
+The n-grams are the dedup module's shingles (``dedup._py_shingles`` in
+the ``dedup.token_rows`` pass, short documents included) so
+contamination, MinHash and Jaccard all agree on what "the same n-gram"
+means.
 
 The reference service has no decontamination stage (it is a per-request
 annotator); this is part of the training-data surface the engine adds.
@@ -29,11 +30,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_extraction_svc_spark.operators.dedup import with_shingles
+from entity_extraction_svc_spark.operators.dedup import _py_shingles, token_rows
 
 # 8-gram default: GPT-3 used 13-grams on very long documents; C4/Dodge use
 # shorter windows. 8 keeps short eval rows (questions, prompts) detectable.
 DEFAULT_N = 8
+
+
+def _grams(docs: DataFrame, n: int, text_col: str) -> DataFrame:
+    """(<the other columns of docs>, gram): each document's DISTINCT word
+    n-grams, deduplicated row-locally so (doc, gram) rows are unique
+    without a shuffle."""
+    keep = [c for c in docs.columns if c != text_col]
+    return token_rows(
+        docs, lambda toks: (list(dict.fromkeys(_py_shingles(toks, n))),),
+        "_g array<string>", text_col,
+    ).select(*keep, F.explode("_g").alias("gram"))
 
 
 def eval_ngrams(eval_docs: DataFrame, n: int = DEFAULT_N,
@@ -43,11 +55,7 @@ def eval_ngrams(eval_docs: DataFrame, n: int = DEFAULT_N,
     This is the broadcast side; dedupe BEFORE broadcasting so the hash
     relation holds each gram once however often benchmarks repeat it.
     """
-    return (
-        with_shingles(eval_docs.select(text_col), text_col, n=n)
-        .select(F.explode("_sh").alias("gram"))
-        .distinct()
-    )
+    return _grams(eval_docs.select(text_col), n, text_col).distinct()
 
 
 def contamination(docs: DataFrame, eval_docs: DataFrame,
@@ -59,18 +67,10 @@ def contamination(docs: DataFrame, eval_docs: DataFrame,
     the document shares with any eval document, and the flag a filter
     would act on.  Every input document gets a row (clean docs report 0),
     so the output is a total audit, not just the hit list.
-
-    Within-document gram dedup is ``array_distinct`` BEFORE the explode —
-    row-local, so (id, gram) rows are already unique and the corpus is
-    never shuffled on the gram; an explode-then-``.distinct()`` would
-    hash-exchange every n-gram of the 100 TB side (plan-audited).
     """
-    grams = (
-        with_shingles(docs.select(id_col, text_col), text_col, n=n)
-        .select(id_col, F.explode(F.array_distinct("_sh")).alias("gram"))
-    )
     hits = (
-        grams.join(F.broadcast(eval_ngrams(eval_docs, n, text_col)), "gram")
+        _grams(docs.select(id_col, text_col), n, text_col)
+        .join(F.broadcast(eval_ngrams(eval_docs, n, text_col)), "gram")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_overlap"))
     )
@@ -86,12 +86,9 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame,
                   id_col: str = "doc_id") -> DataFrame:
     """Drop every contaminated document (all input columns preserved).
     The broadcast anti-join keeps the corpus unshuffled."""
-    grams = (
-        with_shingles(docs.select(id_col, text_col), text_col, n=n)
-        .select(id_col, F.explode("_sh").alias("gram"))
-    )
     bad = (
-        grams.join(F.broadcast(eval_ngrams(eval_docs, n, text_col)), "gram")
+        _grams(docs.select(id_col, text_col), n, text_col)
+        .join(F.broadcast(eval_ngrams(eval_docs, n, text_col)), "gram")
         .select(id_col)
         .distinct()
     )

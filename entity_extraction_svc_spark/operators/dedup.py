@@ -1,16 +1,21 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+embedding cosine, substring spans and lines.
 
-Everything is built-in column expressions / relational joins — JVM-side,
-whole-stage codegen, no Python UDFs — so the same code scales from the 500-row
-test table to a 100 TB corpus:
+Every operator that needs words runs on ONE tokenizer pass,
+:func:`token_rows`: a ``mapInPandas`` pass over Arrow batches that applies
+:func:`_py_norm_tokens` (and, for shingles, :func:`_py_shingles`) and
+hands each document's tokens to the operator's own per-document function.
+What follows it is relational — joins, groupBys, windows in codegen — so
+the same code scales from the 500-row test table to a 100 TB corpus:
 
-* exact:        hash-groupBy on a normalized-text fingerprint (one shuffle on
-                the md5 key; map-side partial aggregation).
+* exact:        hash-groupBy on a normalized-text fingerprint
+                (:func:`_norm_text`, codegen; one shuffle on the md5 key,
+                map-side partial aggregation).
 * MinHash+LSH:  shingle -> 60-bit md5-derived hash -> k universal-hash minima
-                computed per row (narrow), then banding: only the (band,
-                band_hash) groupBy shuffles, and only candidate pairs sharing
-                a bucket are ever joined — the classic near-dup recipe that
-                avoids the O(n^2) cross join.
+                computed per row in the tokenizer pass (narrow), then
+                banding: only the (band, band_hash) groupBy shuffles, and
+                only candidate pairs sharing a bucket are ever joined — the
+                classic near-dup recipe that avoids the O(n^2) cross join.
 * SimHash:      per-bit majority vote over token hashes, packed to a 64-bit
                 key; Hamming-neighbor candidates via band equality.
 * n-gram Jaccard: exact pairwise similarity, but only over pairs sharing at
@@ -24,6 +29,10 @@ universal hashing h_i = (a_i * (h % P) + b_i) % P with P = 2^31 - 1.
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
+import zlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,43 +55,75 @@ def _coeffs(n: int, seed: int = 42) -> list[tuple[int, int]]:
 
 
 def _norm_text(text_col: str) -> Column:
+    """The normalized text: lower, ``\\s+`` runs collapsed to one space,
+    trimmed.  Codegen only, for whole-string uses (fingerprints, lengths);
+    its tokens come from :func:`_py_norm_tokens`."""
     return F.trim(
         F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " ")
     )
 
 
-def _word_tokens(col: Column) -> Column:
-    return F.filter(F.split(col, " "), lambda t: t != "")
+def _py_norm_tokens(text: str | None) -> list[str]:
+    """The word tokenizer: the space-separated tokens of
+    :func:`_norm_text`.  Java regex ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]``,
+    which ``re.ASCII`` gives exactly, and Spark's ``trim`` strips only
+    spaces (control characters stay in the edge tokens).  Lowercasing is
+    Python's full-Unicode ``lower()``, the JVM's mapping on every character
+    of the fixtures and generated corpora (pinned by
+    ``test_py_norm_tokens_matches_jvm``)."""
+    s = re.sub(r"\s+", " ", (text or "").lower(), flags=re.ASCII).strip(" ")
+    return s.split(" ") if s else []
 
 
-def with_shingles(docs: DataFrame, text_col: str = "text", n: int = 3,
-                  out_col: str = "_sh") -> DataFrame:
-    """Adds a word n-gram shingle array column; documents shorter than n
-    words shingle to the whole text so they still participate.
+def _py_shingles(toks: list[str], n: int) -> list[str]:
+    """Word n-gram shingles in order, with multiplicity.  A document
+    shorter than n tokens shingles to its whole normalized text, so it
+    still participates, and an empty one to ``[""]``."""
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
 
-    Two performance constraints, both measured on the sf0.1 documents table:
-    (a) tokens are staged as their own projection column so the split/filter
-    subtree isn't re-inlined per consumer; (b) shingles are built by zipping
-    n shifted slices of the token array rather than indexing ``toks[i+j]``
-    inside a ``transform`` lambda — per-element indexed access through a
-    lambda variable runs ~20x slower than the vectorized zip (40.8s vs 1.8s
-    to shingle+explode 5,000 docs)."""
-    from functools import reduce
 
-    toks = docs.withColumn("_toks", _word_tokens(_norm_text(text_col)))
-    m = F.greatest(F.size("_toks") - (n - 1), F.lit(0))
-    parts = [F.slice("_toks", j + 1, m) for j in range(n)]
-    grams = reduce(
-        lambda acc, p: F.zip_with(acc, p, lambda x, y: F.concat(x, F.lit(" "), y)),
-        parts[1:],
-        parts[0],
-    )
-    return toks.withColumn(
-        out_col,
-        F.when(F.size("_toks") >= n, grams).otherwise(
-            F.array(F.concat_ws(" ", F.col("_toks")))
-        ),
-    ).drop("_toks")
+def _py_h64(s: str) -> int:
+    """:func:`_h64` of one string."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def token_rows(docs: DataFrame, fn, schema: str,
+               text_col: str = "text") -> DataFrame:
+    """The tokenizer pass every token or shingle consumer runs on.
+
+    ``fn(toks)`` maps one document's tokens (:func:`_py_norm_tokens` of
+    ``text_col``) to its output row, a tuple matching the DDL ``schema``,
+    after the document's other columns.  One ``mapInPandas`` pass over
+    Arrow batches, where tokenizing, shingling and per-document hashing run
+    as C-level str ops, and arrays leave it one row per document: a
+    consumer explodes them in Catalyst, which costs little on materialized
+    arrays.  The Catalyst form of the same tokenizer runs its lambdas
+    interpreted, and a ``Generate`` consumer re-inlines the whole shingle
+    subtree: at sf1.0 it took 3.9 s to build the shingle arrays and 13.5 s
+    once exploded, against 0.65 s to explode materialized arrays.  The scan
+    is widened to the session parallelism when a small file under-splits
+    (``scanwide.widen_scan``).
+    """
+    from pyspark.sql.types import StructType
+
+    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+
+    keep = [c for c in docs.columns if c != text_col]
+    fields = StructType.fromDDL(schema)
+
+    def _rows(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = pd.DataFrame.from_records(
+                [fn(_py_norm_tokens(t)) for t in pdf[text_col].tolist()],
+                columns=fields.fieldNames())
+            yield pd.concat([pdf[keep].reset_index(drop=True), out], axis=1)
+
+    return widen_scan(docs).mapInPandas(
+        _rows, StructType([docs.schema[c] for c in keep] + fields.fields))
 
 
 def _h64(col: Column) -> Column:
@@ -129,26 +170,24 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        shingle_n: int = 3) -> DataFrame:
     """(id, sig: array<long>) — k minima of universal hashes over shingles.
 
-    Computed entirely row-local (narrow): shingling, hashing and the k minima
-    are higher-order array expressions inside whole-stage codegen; no shuffle,
-    no Python.  The scan is widened to the session parallelism when a small
-    file yields fewer splits than cores (measured 7.9s -> 1.2s at sf1.0 on
-    local[32]; a no-op at cluster scale — see ``scanwide.widen_scan``).
+    Row-local, no shuffle: the tokenizer pass (:func:`token_rows`) hashes
+    each document's distinct shingles and takes the k minima of
+    (a·h + b) mod P over the document's hash vector with numpy (a, h < 2^31,
+    so a·h + b fits int64 as it fits the JVM long).
     """
-    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+    import numpy as np
 
-    sh = with_shingles(widen_scan(docs.select(id_col, text_col)),
-                       text_col, shingle_n)
-    hashed = sh.withColumn("_hv", F.transform("_sh", lambda s: _h64(s) % MERSENNE_P))
-    mins = F.array(
-        *[
-            F.array_min(
-                F.transform("_hv", lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P)
-            )
-            for a, b in _coeffs(num_hashes)
-        ]
-    )
-    return hashed.select(F.col(id_col), mins.alias("sig"))
+    ab = np.array(_coeffs(num_hashes), dtype=np.int64)
+    a, b = ab[:, :1], ab[:, 1:]
+
+    def sig(toks):
+        hv = np.array([_py_h64(s) % MERSENNE_P
+                       for s in set(_py_shingles(toks, shingle_n))],
+                      dtype=np.int64)
+        return (((a * hv + b) % MERSENNE_P).min(axis=1).tolist(),)
+
+    return token_rows(docs.select(id_col, text_col), sig, "sig array<bigint>",
+                      text_col)
 
 
 def cap_lsh_buckets(buckets: DataFrame, key_cols: list[str],
@@ -362,35 +401,22 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             bits: int = 32) -> DataFrame:
     """Per-bit majority vote over token hashes packed into an integer key.
 
-    simhash_j = 1 iff sum over tokens of (2*bit_j(h(token)) - 1) > 0.
-    Row-local higher-order expressions only (no shuffle, no UDF); the scan
-    is widened when a small file yields fewer splits than cores
-    (``scanwide.widen_scan`` — no-op at cluster scale).
+    simhash_j = 1 iff sum over tokens of (2*bit_j(h(token)) - 1) > 0, in
+    the tokenizer pass (:func:`token_rows`; row-local, no shuffle).  The
+    hashes are 60-bit, so bits 60-63 never win a vote and the key fits a
+    long for any ``bits`` <= 64.
     """
-    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+    import numpy as np
 
-    docs = widen_scan(docs.select(id_col, text_col))
-    # shiftright/shiftleft need column shift amounts -> SQL higher-order expr
-    norm = (
-        f"trim(regexp_replace(lower(coalesce({text_col}, '')), '\\\\s+', ' '))"
-    )
-    hashes = (
-        f"transform(filter(split({norm}, ' '), t -> t != ''), "
-        f"t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
-    )
-    packed = (
-        f"aggregate(transform(sequence(0, {bits - 1}), j -> "
-        f"  if(aggregate(hs, 0L, (acc, h) -> acc + (shiftright(h, j) & 1L) * 2 - 1) > 0, "
-        f"     shiftleft(1L, j), 0L)), "
-        f"0L, (acc, x) -> acc + x)"
-    )
-    return (
-        docs.withColumn("hs", F.expr(hashes))
-        .select(
-            F.col(id_col),
-            F.when(F.size("hs") > 0, F.expr(packed)).otherwise(F.lit(0).cast("long")).alias("simhash"),
-        )
-    )
+    js = np.arange(bits, dtype=np.int64)
+
+    def key(toks):
+        hs = np.array([_py_h64(t) for t in toks], dtype=np.int64)
+        ones = (hs[:, None] >> js & 1).sum(axis=0)
+        return (int(((2 * ones > len(hs)) << js).sum()),)
+
+    return token_rows(docs.select(id_col, text_col), key, "simhash bigint",
+                      text_col)
 
 
 def simhash_dup_pairs(docs: DataFrame, text_col: str = "text",
@@ -653,85 +679,33 @@ def embedding_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.9,
 # n-gram Jaccard (exact, prefix-filtered candidate join + array verification)
 # ---------------------------------------------------------------------------
 
-# Java String.trim strips every char <= U+0020; Python str.strip() strips
-# Unicode whitespace instead, so the JVM-parity normalizer names the set.
-_JAVA_TRIM = "".join(chr(i) for i in range(0x21))
-
-
-def _py_norm_tokens(text: str | None) -> list[str]:
-    """Python twin of ``_word_tokens(_norm_text(c))``: lower, collapse
-    ASCII ``\\s+`` runs (Java regex ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]`` —
-    ``re.ASCII`` gives the identical class), Java-trim, split on ' ',
-    drop empties.  Unicode lowercase corner cases (e.g. dotted capital I)
-    follow Python's full-Unicode lower(), same as the JVM's
-    locale-independent mapping for every character in the fixtures and
-    the generated sf corpora (pinned by test_ngram_rewrite_equivalence)."""
-    import re
-
-    s = re.sub(r"\s+", " ", (text or "").lower(), flags=re.ASCII)
-    s = s.strip(_JAVA_TRIM)
-    return [t for t in s.split(" ") if t]
+def _crc_order(s: str) -> tuple[int, str]:
+    """The (crc32, shingle) total order of :func:`shingle_set_rows`."""
+    return zlib.crc32(s.encode("utf-8")), s
 
 
 def shingle_set_rows(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """(id, sh: array<string> sorted ascending, n_all) — each document's
-    DISTINCT word n-gram shingle set, built in one ``mapInPandas`` pass.
-
-    Why Python and not the Catalyst higher-order expressions of
-    :func:`with_shingles`: HOF lambdas are interpreted (no codegen), and a
-    ``Generate``/aggregate consumer re-inlines the whole zip-of-slices
-    subtree — measured at sf1.0 (50k docs, 2.6M shingles): 3.9s to build
-    the arrays, 13.5s once exploded, vs 0.65s to explode materialized
-    arrays.  Here tokenize/shingle/dedup run as C-level str/set ops per
-    Arrow batch and the arrays materialize exactly once.
+    DISTINCT word n-gram shingle set (:func:`_py_shingles`), built by the
+    tokenizer pass (:func:`token_rows`) so the arrays materialize once.
 
     The sort — by (crc32(shingle), shingle) — is the fixed global total
-    order the prefix filter in :func:`ngram_jaccard_pairs` relies on (any
-    single total order is correct; the hash order keeps prefix buckets
-    uniform, see the inline note).  Short docs (< n tokens) contribute
-    their whole text as one shingle; empty/null docs contribute [''] —
-    both exactly as ``with_shingles``.
+    order the prefix filter in :func:`ngram_jaccard_pairs` relies on.  Any
+    single total order is correct; crc32 spreads the prefix filter's
+    selected elements UNIFORMLY over the shingle vocabulary, where plain
+    string order concentrates every doc's prefix on the lexicographically
+    small shingles and their buckets go quadratic (at sf1.0 the candidate
+    join+count took 8.8 s in crc order against 16.8 s in string order).
+    The string tie-break keeps the order total, and crc32 is fixed by
+    RFC 1952, so the order is engine-independent.
     """
-    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+    def shingle_set(toks):
+        sh = sorted(set(_py_shingles(toks, n)), key=_crc_order)
+        return sh, len(sh)
 
-    id_t = docs.schema[id_col].dataType.simpleString()
-
-    def _rows(batches):
-        import zlib
-
-        import pandas as pd
-
-        # total order = (crc32, shingle): crc32 spreads the prefix filter's
-        # selected elements UNIFORMLY over the shingle vocabulary, where
-        # plain string order concentrates every doc's prefix on the
-        # lexicographically small shingles and their buckets go quadratic —
-        # measured at sf1.0 the candidate join+count dropped 16.8s -> 8.8s
-        # switching from string to crc order.  The string tie-break keeps
-        # the order total; determinism is engine-independent (crc32 is
-        # fixed by RFC 1952).
-        key = lambda s: (zlib.crc32(s.encode("utf-8")), s)  # noqa: E731
-        for pdf in batches:
-            sh_out: list[list[str]] = []
-            for text in pdf[text_col]:
-                toks = _py_norm_tokens(text)
-                if len(toks) >= n:
-                    sh_out.append(sorted(
-                        {" ".join(toks[i:i + n])
-                         for i in range(len(toks) - n + 1)},
-                        key=key,
-                    ))
-                else:
-                    sh_out.append([" ".join(toks)])
-            yield pd.DataFrame({
-                "id": pdf[id_col],
-                "sh": sh_out,
-                "n_all": [len(s) for s in sh_out],
-            })
-
-    return widen_scan(docs.select(id_col, text_col)).mapInPandas(
-        _rows, f"id {id_t}, sh array<string>, n_all int"
-    )
+    return token_rows(docs.select(F.col(id_col).alias("id"), text_col),
+                      shingle_set, "sh array<string>, n_all int", text_col)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
@@ -1203,38 +1177,26 @@ def substring_windows(docs: DataFrame, text_col: str = "text",
     1-based over the normalized token sequence and wh = md5 of the window
     text (hex string — bit-reproducible in any SQL engine).  Documents
     shorter than k tokens contribute their whole text as a single window
-    at pos 1 (wlen = token count) so they still participate.
+    at pos 1 (wlen = token count) so they still participate; a zero-token
+    document has no substrings (letting it through would make every empty
+    doc a "duplicate" of every other).
 
-    Scale shape: window construction is row-local (the zip-of-shifted-
-    slices shingle builder — see :func:`with_shingles` for the measured
-    20x note vs indexed lambdas) and the frame is |corpus tokens| rows;
-    it is meant to be consumed by an aggregation in the same stage, never
-    materialized.  At 100 TB use :func:`winnow_fingerprints` instead,
-    which cuts the shuffled row count ~w/2-fold with a detection
-    guarantee."""
-    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+    Scale shape: the tokenizer pass (:func:`token_rows`) emits the window
+    rows row-locally, and the md5 runs in codegen over them; the frame is
+    |corpus tokens| rows, meant to be consumed by an aggregation in the
+    same stage, never materialized.  At 100 TB use
+    :func:`winnow_fingerprints` instead, which cuts the shuffled row count
+    ~w/2-fold with a detection guarantee."""
+    def windows(toks):
+        return min(k, len(toks)), _py_shingles(toks, k) if toks else []
 
-    nt = F.size(_word_tokens(_norm_text(text_col)))
-    return (
-        with_shingles(widen_scan(docs), text_col=text_col, n=k, out_col="_w")
-        .withColumn("_nt", nt)
-        # a zero-token document has no substrings; letting it through
-        # would make every empty doc a "duplicate" of every other (and
-        # the empty string is NULL-vs-'' engine-dependent)
-        .filter(F.col("_nt") > 0)
-        .select(
-            F.col(id_col),
-            F.posexplode("_w").alias("_p", "_win"),
-            F.when(F.col("_nt") >= k, F.lit(k)).otherwise(F.col("_nt"))
-            .alias("wlen"),
-        )
-        .select(
-            id_col,
-            (F.col("_p") + 1).alias("pos"),
-            "wlen",
-            F.md5("_win").alias("wh"),
-        )
-    )
+    return token_rows(
+        docs.select(id_col, text_col), windows,
+        "wlen int, _w array<string>", text_col,
+    ).select(
+        id_col, F.posexplode("_w").alias("_p", "_win"), "wlen",
+    ).select(id_col, (F.col("_p") + 1).alias("pos"), "wlen",
+             F.md5("_win").alias("wh"))
 
 
 def substring_dup_windows(docs: DataFrame, text_col: str = "text",
@@ -1345,9 +1307,11 @@ def strip_dup_spans(docs: DataFrame, text_col: str = "text",
         tagged.filter(~is_keeper).select(id_col, span).distinct()
         .join(protected, [id_col, "_tp"], "left_anti")
     )
-    toks = docs.select(
-        id_col, F.posexplode(_word_tokens(_norm_text(text_col)))
-        .alias("_p0", "_tok"),
+    toks = token_rows(
+        docs.select(id_col, text_col), lambda toks: (toks,),
+        "_toks array<string>", text_col,
+    ).select(
+        id_col, F.posexplode("_toks").alias("_p0", "_tok"),
     ).select(id_col, (F.col("_p0") + 1).alias("_tp"), "_tok")
     kept = toks.join(covered, [id_col, "_tp"], "left_anti")
     rebuilt = kept.groupBy(id_col).agg(
@@ -1393,42 +1357,24 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     dup-detection shuffle drop from |tokens| to ~2|tokens|/(w+1) (the
     expected density of sliding-window minima).  Ties on the hash value
     break to the leftmost position; documents with fewer than w windows
-    select their single minimal hash so short docs still participate.
+    select their single minimal hash so short docs still participate, and
+    zero-token documents select nothing.
 
-    Selection is entirely row-local array expressions (zip_with /
-    transform / array_min over (h, pos) structs — struct ordering is
-    lexicographic) inside one codegen stage; only the selected
-    fingerprints are exploded."""
-    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+    Hashing and selection run per document in the tokenizer pass
+    (:func:`token_rows`), so only the selected fingerprints leave it."""
+    def winnow(toks):
+        if not toks:
+            return [], []
+        st = [(_py_h64(s), p) for p, s in enumerate(_py_shingles(toks, k), 1)]
+        sel = dict.fromkeys(min(st[i:i + w])
+                            for i in range(max(len(st) - w + 1, 1)))
+        return [p for _, p in sel], [h for h, _ in sel]
 
-    shingled = with_shingles(
-        widen_scan(docs), text_col=text_col, n=k, out_col="_w"
-    ).filter(
-        F.size(_word_tokens(_norm_text(text_col))) > 0  # no substrings in ""
-    )
-    hs = F.transform("_w", _h64)
-    with_h = shingled.withColumn("_hs", hs)
-    structs = F.zip_with(
-        "_hs",
-        F.sequence(F.lit(1), F.size("_hs")),
-        lambda h, p: F.struct(h.alias("h"), p.alias("p")),
-    )
-    nsel = F.greatest(F.size("_hs") - (w - 1), F.lit(1))
-    sel = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), nsel - 1),
-            lambda i: F.array_min(F.slice(F.col("_st"), i + 1, w)),
-        )
-    )
-    return (
-        with_h.withColumn("_st", structs)
-        .select(id_col, F.explode(sel).alias("_s"))
-        .select(
-            id_col,
-            F.col("_s.p").alias("pos"),
-            F.col("_s.h").alias("h"),
-        )
-    )
+    return token_rows(
+        docs.select(id_col, text_col), winnow,
+        "pos array<int>, h array<bigint>", text_col,
+    ).select(id_col, F.explode(F.arrays_zip("pos", "h")).alias("_s")).select(
+        id_col, F.col("_s.pos").alias("pos"), F.col("_s.h").alias("h"))
 
 
 def winnow_dup_groups(docs: DataFrame, text_col: str = "text",

@@ -5,8 +5,9 @@ hashing trick (Weinberger et al. 2009, arXiv:0902.2206) gives a REAL,
 scalable, model-free embedding: token ``t`` adds ``sign(h(t))`` to bucket
 ``h(t) mod dim``; the vector is L2-normalized.  Properties that matter here:
 
-* pure Catalyst column expressions — row-local, whole-stage codegen, no
-  Python, no vocabulary state, survives a 100 TB scan;
+* row-local and stateless — the bucket sums run per document in the
+  dedup module's tokenizer pass, with no vocabulary, so a 100 TB scan
+  needs no shuffle;
 * md5-derived hashing, so the DuckDB oracle reproduces every component
   bit-for-bit (same trick as operators/dedup.py);
 * identical texts embed identically (cos = 1), token-overlapping texts
@@ -22,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_extraction_svc_spark.operators.dedup import (
-    _h64,
-    _norm_text,
-    _word_tokens,
-)
+from entity_extraction_svc_spark.operators.dedup import _py_h64, token_rows
 
 
 def hash_embed(docs: DataFrame, dim: int = 16, text_col: str = "text",
@@ -34,39 +31,21 @@ def hash_embed(docs: DataFrame, dim: int = 16, text_col: str = "text",
                out_col: str = "embedding") -> DataFrame:
     """(id, embedding: array<double>) — signed feature-hash embedding.
 
-    Staged as three projections (tokens -> (bucket, sign) pairs -> vector)
-    so Catalyst doesn't re-inline the md5 subtree once per output bucket
-    (the element_at-in-transform trap measured at ~20x in dedup.py).
-    The scan is widened when a small file under-splits: the per-row
-    md5+fold expression ran on 2 of 32 cores at sf1.0 — 69s -> 4.4s
-    (r6; no-op at cluster scale, see ``scanwide.widen_scan``).
+    The tokenizer pass (``dedup.token_rows``) sums each document's signed
+    token hashes into ``dim`` buckets; the sums are small integers, exact
+    in a double whatever the order.  The L2 normalization and the
+    ``round(v / norm, 6)`` stay in Catalyst: ``F.round`` rounds HALF_UP,
+    numpy and Python round half-to-even.
     """
-    from entity_extraction_svc_spark.operators.scanwide import widen_scan
+    def buckets(toks):
+        raw = [0.0] * dim
+        for t in toks:
+            h = _py_h64(t)
+            raw[h % dim] += 1.0 if h >> 8 & 1 else -1.0
+        return (raw,)
 
-    hashed = (
-        widen_scan(docs)
-        .withColumn("_toks", _word_tokens(_norm_text(text_col)))
-        .withColumn("_h", F.transform("_toks", lambda t: _h64(t)))
-        .withColumn(
-            "_bs",
-            F.transform(
-                "_h",
-                lambda h: F.struct(
-                    (h % dim).cast("int").alias("b"),
-                    (F.shiftright(h, 8) % 2 * 2 - 1).cast("double").alias("s"),
-                ),
-            ),
-        )
-    )
-    raw = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: F.aggregate(
-            "_bs",
-            F.lit(0.0),
-            lambda acc, p: acc + F.when(p["b"] == j, p["s"]).otherwise(F.lit(0.0)),
-        ),
-    )
-    staged = hashed.withColumn("_raw", raw)
+    staged = token_rows(docs.select(id_col, text_col), buckets,
+                        "_raw array<double>", text_col)
     norm = F.sqrt(
         F.aggregate("_raw", F.lit(0.0), lambda acc, v: acc + v * v)
     )

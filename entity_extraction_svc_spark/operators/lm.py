@@ -23,8 +23,9 @@ scoring fresh text against a trained model hits unseen histories, where
 the left joins coalesce both counts to 0 and the formula degrades to the
 uniform k / (k V) floor — no special-casing, no NaNs.
 
-Tokenization is the dedup module's normalized whitespace split so LM
-scores, shingles and fingerprints agree on token identity.
+Tokens and n-grams come from the dedup module's tokenizer pass
+(``dedup.token_rows``) so LM scores, shingles and fingerprints agree on
+token identity.
 """
 
 from __future__ import annotations
@@ -32,52 +33,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_extraction_svc_spark.operators.dedup import _norm_text, _word_tokens
+from entity_extraction_svc_spark.operators.dedup import token_rows
 
 DEFAULT_K = 0.5
 LOG2 = 0.6931471805599453  # ln(2); log2(x) = ln(x)/ln(2), identical in DuckDB
 
 
-def _doc_bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, w1, w2) with multiplicity — zip of the token array against its
-    own 1-shifted slice (the with_shingles trick, kept row-local)."""
-    toks = docs.select(
-        F.col(id_col), _word_tokens(_norm_text(text_col)).alias("_toks")
-    )
-    m = F.greatest(F.size("_toks") - 1, F.lit(0))
-    pairs = F.zip_with(
-        F.slice("_toks", 1, m),
-        F.slice("_toks", 2, m),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return toks.select(
-        id_col, F.explode(pairs).alias("_bg")
-    ).select(id_col, F.col("_bg.w1").alias("w1"), F.col("_bg.w2").alias("w2"))
+def _doc_ngrams(docs: DataFrame, text_col: str, id_col: str,
+                n: int) -> DataFrame:
+    """(id, w1, ..., wn) with multiplicity, one row per run of n adjacent
+    tokens: the tokenizer pass emits the n position-aligned token slices
+    of each document, and Catalyst zips and explodes them."""
+    ws = [f"w{i}" for i in range(1, n + 1)]
 
+    def aligned(toks):
+        m = max(len(toks) - n + 1, 0)
+        return tuple(toks[i:i + m] for i in range(n))
 
-def _doc_trigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, w1, w2, w3) with multiplicity — the 3-slice zip, row-local."""
-    toks = docs.select(
-        F.col(id_col), _word_tokens(_norm_text(text_col)).alias("_toks")
-    )
-    m = F.greatest(F.size("_toks") - 2, F.lit(0))
-    inner = F.zip_with(
-        F.slice("_toks", 2, m),
-        F.slice("_toks", 3, m),
-        lambda b, c: F.struct(b.alias("w2"), c.alias("w3")),
-    )
-    tris = F.zip_with(
-        F.slice("_toks", 1, m),
-        inner,
-        lambda a, s: F.struct(
-            a.alias("w1"), s["w2"].alias("w2"), s["w3"].alias("w3")
-        ),
-    )
-    return toks.select(id_col, F.explode(tris).alias("_tg")).select(
-        id_col,
-        F.col("_tg.w1").alias("w1"),
-        F.col("_tg.w2").alias("w2"),
-        F.col("_tg.w3").alias("w3"),
+    slices = token_rows(docs.select(id_col, text_col), aligned,
+                        ", ".join(f"{w} array<string>" for w in ws), text_col)
+    return (
+        slices.select(id_col, F.explode(F.arrays_zip(*ws)).alias("_g"))
+        .select(id_col, *[F.col(f"_g.{w}").alias(w) for w in ws])
     )
 
 
@@ -88,12 +65,13 @@ def train_bigram_lm(docs: DataFrame, text_col: str = "text",
     Unigram counts are token occurrences (all positions), the standard MLE
     denominator approximation; both aggregations are map-side combinable.
     """
-    toks = docs.select(
-        F.explode(_word_tokens(_norm_text(text_col))).alias("w")
+    uni = (
+        _doc_ngrams(docs, text_col, id_col, 1)
+        .groupBy(F.col("w1").alias("w"))
+        .agg(F.count("*").alias("c1"))
     )
-    uni = toks.groupBy("w").agg(F.count("*").alias("c1"))
     bi = (
-        _doc_bigrams(docs, text_col, id_col)
+        _doc_ngrams(docs, text_col, id_col, 2)
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("c12"))
     )
@@ -123,7 +101,7 @@ def score_cross_entropy(docs: DataFrame, model=None,
     # V as a 1-row dimension, crossJoined so scoring stays one lazy plan
     vocab = uni.agg(F.count("*").alias("_v"))
     scored = (
-        _doc_bigrams(docs, text_col, id_col)
+        _doc_ngrams(docs, text_col, id_col, 2)
         .join(bi, ["w1", "w2"], "left")
         .join(uni, F.col("w1") == uni["w"], "left")
         .crossJoin(F.broadcast(vocab))
@@ -164,7 +142,7 @@ def train_trigram_lm(docs: DataFrame, text_col: str = "text",
     interpolation order's numerator c(w2 w3)."""
     uni, bi = train_bigram_lm(docs, text_col, id_col)
     tri = (
-        _doc_trigrams(docs, text_col, id_col)
+        _doc_ngrams(docs, text_col, id_col, 3)
         .groupBy("w1", "w2", "w3")
         .agg(F.count("*").alias("c123"))
     )
@@ -201,7 +179,7 @@ def score_cross_entropy_interpolated(
         F.coalesce("c1_2", F.lit(0)) + kv)
     p1 = (F.coalesce("c1_3", F.lit(0)) + F.lit(k)) / (F.col("_n") + kv)
     scored = (
-        _doc_trigrams(docs, text_col, id_col)
+        _doc_ngrams(docs, text_col, id_col, 3)
         .join(tri, ["w1", "w2", "w3"], "left")
         .join(bi.select(F.col("w1"), F.col("w2"),
                         F.col("c12").alias("c12_h")), ["w1", "w2"], "left")

@@ -3,8 +3,8 @@
 A small parquet table scans as one or two input splits
 (``spark.sql.files.maxPartitionBytes`` = 128 MB; the sf1.0 documents table
 is 5.7 MB), so every row-local stage fused onto the scan — Python batch
-passes, higher-order shingle expressions, per-row hashing — runs on one or
-two cores while the rest of the machine idles.  Measured at sf1.0 on
+passes such as the tokenizer pass, per-row hashing — runs on one or two
+cores while the rest of the machine idles.  Measured at sf1.0 on
 local[32]: the minhash signature pass dropped 7.9s -> 1.2s and the ngram
 shingle-set pass 3.8s -> 0.9s from widening alone.
 

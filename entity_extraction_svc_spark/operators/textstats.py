@@ -4,7 +4,9 @@ Language-ID (stopword-ratio heuristic), quality scoring (length / punct /
 stopword ratios), token counting (whitespace + BPE-ish regex), and document
 fingerprinting.  All pure built-in column expressions (JVM-side, whole-stage
 codegen) — no Python in the hot path, so they survive a 100 TB scan at full
-parquet throughput with column pruning (only ``text`` is read).
+parquet throughput with column pruning (only ``text`` is read).  The one
+exception is the Gopher repetition statistics, which count n-grams in the
+dedup module's tokenizer pass.
 
 The reference's analogues are its mention filters and normalization chain
 (``annotators/entity_extraction_base/server.py:131-140``,
@@ -165,66 +167,40 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     rules: the character fraction covered by the MOST FREQUENT word 2-gram,
     and the character fraction covered by DUPLICATED word 5-grams.
 
-    Execution shape is the scalable one: explode n-grams, count per
-    (doc, gram) — a wordcount-shaped shuffle with map-side partial
-    aggregation — then one per-doc aggregate.  Per-doc quadratic array
-    expressions would stay row-local but burn O(d^2) per document; the
-    relational form is linear and AQE-balanced at 100 TB.
+    Both are counted per document in the dedup module's tokenizer pass
+    (``dedup.token_rows``): a hash count over the document's n-grams is
+    linear, row-local, and needs no shuffle.  The most frequent 2-gram is
+    picked by count with a (count, length) tie-break — a long
+    once-occurring gram must not out-score a short high-count one.
 
     Character accounting uses len(gram)*count (gram text includes its
     separating spaces), normalized by the normalized-text length — the same
     definition the DuckDB oracle reproduces.
     """
+    from collections import Counter
+
     from entity_extraction_svc_spark.operators.dedup import (
         _norm_text,
-        with_shingles,
+        _py_shingles,
+        token_rows,
     )
 
-    base = docs.select(
-        F.col(id_col),
-        F.length(_norm_text(text_col)).alias("_n_chars"),
+    def coverage(toks):
+        top = max((c, len(g)) for g, c in Counter(_py_shingles(toks, 2)).items())
+        dup = sum(c * len(g) for g, c in Counter(_py_shingles(toks, 5)).items()
+                  if c > 1)
+        return top[0] * top[1], dup
+
+    counted = token_rows(
+        docs.select(id_col, text_col,
+                    F.length(_norm_text(text_col)).alias("_n_chars")),
+        coverage, "_top2 bigint, _dup5 bigint", text_col,
     )
-
-    def gram_frac(n: int, dup_only: bool):
-        grams = with_shingles(docs, text_col, n=n).select(
-            F.col(id_col), F.explode("_sh").alias("gram")
-        )
-        counts = grams.groupBy(id_col, "gram").agg(F.count("*").alias("cnt"))
-        chars = F.col("cnt") * F.length("gram")
-        if dup_only:
-            agg = F.sum(F.when(F.col("cnt") > 1, chars).otherwise(F.lit(0)))
-            return counts.groupBy(id_col).agg(agg.alias("_chars"))
-        # the Gopher rule is the coverage of the MOST FREQUENT 2-gram, not
-        # max(cnt*len) over all grams (a long once-occurring gram must not
-        # out-score a short high-count one): pick the gram by max count with
-        # a deterministic (cnt, len, gram) tie-break, then use ITS cnt*len
-        top = F.max(
-            F.struct(
-                F.col("cnt"), F.length("gram").alias("glen"), F.col("gram")
-            )
-        )
-        return counts.groupBy(id_col).agg(top.alias("_t")).select(
-            id_col, (F.col("_t.cnt") * F.col("_t.glen")).alias("_chars")
-        )
-
-    top2 = gram_frac(2, dup_only=False).withColumnRenamed("_chars", "_top2")
-    dup5 = gram_frac(5, dup_only=True).withColumnRenamed("_chars", "_dup5")
-    return (
-        base.join(top2, id_col, "left")
-        .join(dup5, id_col, "left")
-        .select(
-            id_col,
-            F.round(
-                F.coalesce(F.col("_top2"), F.lit(0))
-                / F.greatest(F.col("_n_chars"), F.lit(1)),
-                6,
-            ).alias("top_2gram_char_frac"),
-            F.round(
-                F.coalesce(F.col("_dup5"), F.lit(0))
-                / F.greatest(F.col("_n_chars"), F.lit(1)),
-                6,
-            ).alias("dup_5gram_char_frac"),
-        )
+    n_chars = F.greatest(F.col("_n_chars"), F.lit(1))
+    return counted.select(
+        id_col,
+        F.round(F.col("_top2") / n_chars, 6).alias("top_2gram_char_frac"),
+        F.round(F.col("_dup5") / n_chars, 6).alias("dup_5gram_char_frac"),
     )
 
 

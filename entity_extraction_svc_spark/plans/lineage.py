@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from entity_extraction_svc_spark.plans.fused import build_fused
-from entity_extraction_svc_spark.schemas import LINEAGE, METRICS
+from entity_extraction_svc_spark.schemas import LINEAGE, METRICS, PAGES
 
 
 def new_run_id() -> str:
@@ -184,7 +184,8 @@ def run_checkpointed(
     triples this round appended.
     """
     _require_local(out_dir)
-    pages = spark.read.parquet(pages_path)
+    # the declared schema: an inferred one costs every round a Spark job
+    pages = spark.read.schema(PAGES).parquet(pages_path)
     done = processed_urls(spark, out_dir)
     if done is not None:
         pages = pages.join(done, "url", "left_anti")

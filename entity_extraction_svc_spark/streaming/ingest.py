@@ -70,9 +70,9 @@ def stream_dedup(pages_stream: DataFrame, watermark: str = "24 hours") -> DataFr
     does the bookkeeping; the event-time watermark bounds the state store —
     a re-fetch older than the watermark may pass again, which is the right
     trade at web scale (state can't grow with the crawl forever)."""
-    fp = F.md5(
-        F.trim(F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " "))
-    )
+    from entity_extraction_svc_spark.operators.dedup import _norm_text
+
+    fp = F.md5(_norm_text("text"))
     return (
         pages_stream.withColumn("fp_md5", fp)
         .withWatermark("warc_ts", watermark)

@@ -8,6 +8,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from entity_extraction_svc_spark.plans import lineage as L
+from entity_extraction_svc_spark.schemas import PAGES
 
 
 def test_resume_after_partial_run(spark, fixture_dir):
@@ -428,6 +429,22 @@ def test_repair_metrics_on_a_consistent_store_runs_no_job(spark, fixture_dir):
     met = spark.read.parquet(L.metrics_path(out))
     assert [r.asDict() for r in met.filter(F.col("run_id") == s1["run_id"])
             .orderBy("partition_id").collect()] == run1
+
+
+def test_a_round_plans_its_slice_without_a_job(spark, fixture_dir,
+                                              monkeypatch):
+    """The pages are read with their declared schema, so a round over a
+    committed store plans its resume anti-join and slice without a Spark
+    job (an inferred schema costs a job per round)."""
+    out = tempfile.mkdtemp(prefix="kg_plan_jobs_")
+    pages_path = f"{fixture_dir}/pages.parquet"
+    L.run_to_completion(spark, pages_path, fixture_dir, out)
+    monkeypatch.setattr(L, "commit_slice", lambda spark, pages, *a, **k: pages)
+    pages, jobs = _jobs_in(spark, "plan-round", lambda: L.run_checkpointed(
+        spark, pages_path, fixture_dir, out, max_docs=60))
+    assert jobs == 0
+    assert pages.columns == PAGES.fieldNames()
+    assert pages.count() == 0
 
 
 def test_batch_rounds_and_stream_batches_share_one_commit(spark, fixture_dir):

@@ -145,24 +145,45 @@ def test_non_broadcast_verify_path(spark):
 
 
 def test_py_norm_tokens_matches_jvm(spark):
-    """The Python tokenizer twin must agree with the Catalyst
-    _word_tokens(_norm_text(...)) chain on whitespace/edge inputs."""
-    from pyspark.sql import functions as F
+    """The one tokenizer splits exactly the Catalyst normalizer's text into
+    non-empty tokens, and the tokenizer pass's n=3 shingles are the DuckDB
+    oracle's wherever DuckDB normalizes a text as the JVM does."""
+    import duckdb
 
+    from __spark_entry__ import _NORM, _SHINGLES
     from entity_extraction_svc_spark.operators.dedup import (
         _norm_text,
         _py_norm_tokens,
-        _word_tokens,
+        _py_shingles,
+        token_rows,
     )
 
     texts = [
         "", None, "  ", "\t\n", "A  B\tC", "a\x0bb", "Mixed CASE  txt",
         "trailing  ", "  leading", "woßrd", "İstanbul",
-        "a b", "x " * 5,
+        "a b", "x " * 5, "\x01ab c\x02", "\x00 x",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "i long, text string")
-    jvm = {r["i"]: r["toks"] for r in df.select(
-        "i", _word_tokens(_norm_text("text")).alias("toks")).collect()}
+    jvm = {r["i"]: r["norm"] for r in df.select(
+        "i", _norm_text("text").alias("norm")).collect()}
     for i, t in enumerate(texts):
-        assert _py_norm_tokens(t) == jvm[i], (i, t)
+        toks = _py_norm_tokens(t)
+        assert " ".join(toks) == jvm[i], (i, t)
+        assert "" not in toks, (i, t)
+
+    emitted = {r["i"]: r["sh"] for r in token_rows(
+        df, lambda toks: (_py_shingles(toks, 3),), "sh array<string>"
+    ).collect()}
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    oracle = {i: (norm, sh) for i, norm, sh in con.execute(
+        f"SELECT i, {_NORM}, {_SHINGLES} FROM documents").fetchall()}
+    agree = [i for i in jvm if oracle[i][0] == jvm[i]]
+    # DuckDB's \s (RE2) leaves out \x0b, and its lower maps İ to a plain
+    # i where the JVM keeps the combining dot: the only edge inputs it
+    # normalizes apart from the JVM
+    assert sorted(set(jvm) - set(agree)) == [
+        texts.index("a\x0bb"), texts.index("İstanbul")]
+    for i in agree:
+        assert emitted[i] == oracle[i][1], (i, texts[i])

@@ -149,12 +149,18 @@ def test_empty_docs_excluded(spark):
     # zero-token docs have no substrings — they must not form dup groups
     # (and the empty string is NULL-vs-'' engine-dependent in SQL oracles)
     docs = spark.createDataFrame(
-        [(1, ""), (2, ""), (3, "   "), (4, "real words here now")],
+        [(1, ""), (2, ""), (3, "   "), (4, "real words here now"),
+         (5, None), (6, None), (7, "\t\n\x0b ")],
         "doc_id int, text string",
     )
+    assert {r.doc_id for r in substring_windows(docs, k=4).collect()} == {4}
     assert substring_dup_windows(docs, k=4).count() == 0
     assert substring_dup_spans(docs, k=4).count() == 0
     assert {r.doc_id for r in winnow_fingerprints(docs, k=4, w=4).collect()} == {4}
+    stripped = {r.doc_id: r.text_stripped
+                for r in strip_dup_spans(docs, k=4).collect()}
+    assert stripped == {1: "", 2: "", 3: "", 4: "real words here now",
+                        5: "", 6: "", 7: ""}
 
 
 def test_strip_protects_keepers_under_overlap(spark):

@@ -574,17 +574,86 @@ def test_contamination_and_decontaminate(spark):
 
 
 def test_contamination_short_text_fallback(spark):
-    """Sub-n documents shingle to their whole text (with_shingles
-    contract): an exact short match is still caught."""
+    """Sub-n documents shingle to their whole text (the shingler's
+    short-document rule): an exact short match is still caught, and null
+    or whitespace-only documents shingle to '' and match nothing."""
     from entity_extraction_svc_spark.operators.decontam import contamination
 
     docs = spark.createDataFrame(
-        [(0, "short eval question"), (1, "short eval questions")],
+        [(0, "short eval question"), (1, "short eval questions"),
+         (2, None), (3, " \t\n\x0b ")],
         "doc_id long, text string",
     )
     ev = spark.createDataFrame([("short  EVAL question",)], "text string")
     got = {r.doc_id: r.contaminated for r in contamination(docs, ev, n=8).collect()}
-    assert got == {0: True, 1: False}  # normalization folds case/whitespace
+    # normalization folds case/whitespace
+    assert got == {0: True, 1: False, 2: False, 3: False}
+
+
+# each tokenizer-pass consumer's output schema, as the Catalyst plans
+# before the pass typed it: the contract compare checks only dtype kinds
+_PASS_SCHEMAS = {
+    "minhash_signatures": "doc_id:bigint,sig:array<bigint>",
+    "minhash_band_rows":
+        "doc_id:bigint,sig:array<bigint>,band:int,band_hash:string,pfx:string",
+    "simhash": "doc_id:bigint,simhash:bigint",
+    "shingle_set_rows": "id:bigint,sh:array<string>,n_all:int",
+    "substring_windows": "doc_id:bigint,pos:int,wlen:int,wh:string",
+    "substring_dup_windows":
+        "wh:string,n_occ:bigint,n_docs:bigint,keeper_id:bigint,keeper_pos:int",
+    "substring_dup_spans":
+        "doc_id:bigint,span_start:int,span_end:int,span_tokens:int",
+    "strip_dup_spans": "doc_id:bigint,text:string,lang:string,text_stripped:string",
+    "winnow_fingerprints": "doc_id:bigint,pos:int,h:bigint",
+    "winnow_dup_groups":
+        "h:bigint,n_occ:bigint,n_docs:bigint,keeper_id:bigint,keeper_pos:int",
+    "eval_ngrams": "gram:string",
+    "contamination": "doc_id:bigint,n_overlap:bigint,contaminated:boolean",
+    "decontaminate": "doc_id:bigint,text:string,lang:string",
+    "repetition_stats":
+        "doc_id:bigint,top_2gram_char_frac:double,dup_5gram_char_frac:double",
+    "hash_embed": "doc_id:bigint,embedding:array<double>",
+    "train_bigram_lm.uni": "w:string,c1:bigint",
+    "train_bigram_lm.bi": "w1:string,w2:string,c12:bigint",
+    "score_cross_entropy":
+        "doc_id:bigint,n_bigrams:bigint,cross_entropy:double",
+    "score_cross_entropy.order3":
+        "doc_id:bigint,n_trigrams:bigint,cross_entropy:double",
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PASS_SCHEMAS))
+def test_tokenizer_pass_consumers_keep_their_schema(docs, op):
+    from entity_extraction_svc_spark.operators import dedup, decontam, lm
+    from entity_extraction_svc_spark.operators.embed import hash_embed
+    from entity_extraction_svc_spark.operators.textstats import repetition_stats
+
+    ev = docs.select("text")
+    build = {
+        "minhash_signatures": lambda: dedup.minhash_signatures(docs),
+        "minhash_band_rows": lambda: dedup.minhash_band_rows(docs),
+        "simhash": lambda: dedup.simhash(docs),
+        "shingle_set_rows": lambda: dedup.shingle_set_rows(docs),
+        "substring_windows": lambda: dedup.substring_windows(docs),
+        "substring_dup_windows": lambda: dedup.substring_dup_windows(docs),
+        "substring_dup_spans": lambda: dedup.substring_dup_spans(docs),
+        "strip_dup_spans": lambda: dedup.strip_dup_spans(docs),
+        "winnow_fingerprints": lambda: dedup.winnow_fingerprints(docs),
+        "winnow_dup_groups": lambda: dedup.winnow_dup_groups(docs),
+        "eval_ngrams": lambda: decontam.eval_ngrams(ev),
+        "contamination": lambda: decontam.contamination(docs, ev),
+        "decontaminate": lambda: decontam.decontaminate(docs, ev),
+        "repetition_stats": lambda: repetition_stats(docs),
+        "hash_embed": lambda: hash_embed(docs),
+        "train_bigram_lm.uni": lambda: lm.train_bigram_lm(docs)[0],
+        "train_bigram_lm.bi": lambda: lm.train_bigram_lm(docs)[1],
+        "score_cross_entropy": lambda: lm.score_cross_entropy(docs),
+        "score_cross_entropy.order3":
+            lambda: lm.score_cross_entropy(docs, order=3),
+    }
+    df = build[op]()
+    assert df.schema.simpleString() == f"struct<{_PASS_SCHEMAS[op]}>"
+    df.collect()  # the pass's pandas frames convert to these types
 
 
 def test_bigram_lm_hand_computed(spark):
