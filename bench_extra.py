@@ -9,7 +9,9 @@ run's time:
 * noop-sink timings of their internal stages and of every consumer of the
   tokenizer pass (``dedup.token_rows``), so a change can be attributed to
   the stage it touched (e.g. "the inverted-index self-join, not the
-  shingling, is the 90% of dedup_ngram_jaccard").
+  shingling, is the 90% of dedup_ngram_jaccard"), and
+* ``python_stage_floor``: the fixed cost of a four-task Python stage whose
+  body is trivial.
 
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [stage ...]
@@ -123,6 +125,18 @@ def stage_fns(spark, sf_dir: str):
     fns["hash_embed"] = lambda: noop(hash_embed(docs, dim=16))
     fns["train_bigram_lm"] = train_bigram_lm
     fns["train_trigram_lm"] = lambda: noop(lm.train_trigram_lm(docs)[2])
+
+    # ---- a Python stage's fixed cost --------------------------------
+    # four tasks over 400 checkpointed rows that call one package function:
+    # the time is the per-task set-up of a Python worker, not the UDF body
+    floor_rows = spark.range(0, 400, numPartitions=4).localCheckpoint()
+
+    def n_tokens(batches):
+        for b in batches:
+            yield b.assign(n=b["id"].map(lambda i: len(dd._py_norm_tokens(str(i)))))
+
+    fns["python_stage_floor"] = lambda: noop(
+        floor_rows.mapInPandas(n_tokens, "id long, n long"))
 
     # ---- the small queries, full twins -------------------------------
     fns["doc_stats_full"] = lambda: doc_stats(docs).count()

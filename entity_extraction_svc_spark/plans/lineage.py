@@ -128,8 +128,17 @@ def commit_slice(spark: SparkSession, pages: DataFrame, kb_dir: str,
     manifest, lineage append (the commit point) and metrics, under
     ``run_id``.  Returns ``run_id``, ``n_pages`` (the urls committed) and
     ``n_triples`` (the distinct triples appended); an empty slice appends
-    nothing."""
+    nothing.
+
+    A ``run_id`` that already has metrics commits nothing and launches no
+    Spark job: Spark replays a micro-batch whose commit ran but whose
+    stream checkpoint did not land, under the same ``stream-<batch_id>``.
+    The check follows the repair, so a run torn between its lineage append
+    and its metrics write counts as committed too, while a run killed
+    before its lineage append has no metrics and commits again."""
     repair_metrics(spark, out_dir)
+    if run_id in _metrics_run_ids(out_dir):
+        return {"run_id": run_id, "n_pages": 0, "n_triples": 0}
     # the slice is read by the fused pass and by the lineage rows: persist
     # it so both see the same pages (a limit is re-evaluated lazily)
     pages = pages.persist()

@@ -4,6 +4,18 @@ Tuned for the pipeline's shape: Arrow-batched pandas UDF stages, wide
 shuffles only in the triples aggregation (distinct QIDs; final repartition
 by subject hash), broadcast dimension joins, AQE for runtime re-planning and
 skew-join splitting at scale.
+
+Every layer runs as Python tasks (Arrow ``mapInPandas`` passes and pandas
+UDFs), and each Python task pays a fixed cost before its body runs.  Most
+of it was Spark's worker calling ``importlib.invalidate_caches()`` at the
+start of every task, which on CPython 3.11/3.12 makes each zip importer on
+the worker's path (``pyspark.zip`` once per imported sub-package, py4j, the
+spark-core jar, the package zip that :func:`_ship_package` adds) re-read
+its archive's central directory: 0.1-0.4 s of CPU per task on a shared
+4-core VM.  None of those archives changes in place, so the package's
+first import in a worker makes its zip importers ignore the call
+(``_StableZipImporter`` in the package ``__init__``); the driver is left
+as it is, and the first task of each worker still pays the cost once.
 """
 
 from __future__ import annotations

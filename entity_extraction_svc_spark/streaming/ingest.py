@@ -15,7 +15,9 @@ that heals a torn earlier commit.
 catch-up/resume mode; a production deployment leaves the default trigger
 on for continuous tailing.  Exactly-once here = file-source checkpointing
 (each input file enters exactly one micro-batch) + set-semantic triples +
-per-url lineage rows carrying the batch id.
+per-url lineage rows carrying the batch id.  A replayed micro-batch (its
+commit ran, its stream checkpoint did not land) finds its run_id in the
+metrics table and commits nothing.
 
 ``windowed_page_counts`` is the event-time side: pages-per-window with a
 watermark on ``warc_ts`` to bound state and admit late pages.

@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
-from tools.check_contract import compare
+from tools.check_contract import DTYPE_ALLOWED, compare
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -35,19 +35,38 @@ def con():
 def test_query_matches_oracle(spark, con, name):
     sdf = entry_mod.queries()[name](spark, SF_DIR).toPandas()
     odf = con.execute(entry_mod.oracle_sql()[name]).fetchdf()
-    assert compare(sdf, odf) == []
+    assert compare(sdf, odf, name) == []
 
 
 def test_compare_is_strict_on_dtype_kind():
     """Equal values of another dtype kind fail (int64 vs float64, how a
-    doc_pack red once passed locally); another width of the same kind
-    passes (int32 vs int64)."""
+    doc_pack red once passed locally), and so does another width of the
+    same kind (int32 vs int64) off the allow-list."""
     ints = pd.DataFrame({"k": ["a", "b"], "v": np.array([1, 2], "int64")})
     floats = ints.assign(v=np.array([1.0, 2.0], "float64"))
     narrow = ints.assign(v=np.array([1, 2], "int32"))
-    assert compare(ints, floats) == ["dtype kind v: int64 vs float64"]
-    assert compare(narrow, ints) == []
+    assert compare(ints, floats) == ["dtype v: int64 vs float64"]
+    assert compare(narrow, ints) == ["dtype v: int32 vs int64"]
     assert compare(ints, ints.assign(v=[1, 3]))[0].startswith("values differ")
+
+
+def test_compare_allows_only_listed_dtype_pairs():
+    """A (query, column, Spark dtype, oracle dtype) pair on the allow-list
+    passes; the same widths under another query, another column or the
+    reverse direction fail."""
+    assert ("kg_date_format", "yr", "int32", "int64") in DTYPE_ALLOWED
+    assert all(why for why in DTYPE_ALLOWED.values())
+    spark_side = pd.DataFrame({"day": ["2024-01-01"],
+                               "yr": np.array([2024], "int32")})
+    oracle_side = spark_side.assign(yr=np.array([2024], "int64"))
+    assert compare(spark_side, oracle_side, "kg_date_format") == []
+    assert compare(spark_side, oracle_side, "doc_profile") == \
+        ["dtype yr: int32 vs int64"]
+    assert compare(oracle_side, spark_side, "kg_date_format") == \
+        ["dtype yr: int64 vs int32"]
+    renamed = spark_side.rename(columns={"yr": "year"})
+    assert compare(renamed, oracle_side.rename(columns={"yr": "year"}),
+                   "kg_date_format") == ["dtype year: int32 vs int64"]
 
 
 def test_prep_logs_a_failed_ship(monkeypatch, caplog):

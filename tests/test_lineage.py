@@ -431,6 +431,69 @@ def test_repair_metrics_on_a_consistent_store_runs_no_job(spark, fixture_dir):
             .orderBy("partition_id").collect()] == run1
 
 
+def _store_state(out: str) -> dict:
+    """The committed store as files and rows: the lineage rows, the
+    snapshot manifests and the metrics files with their rows."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    def rows(files):
+        return sorted((r for f in files for r in pq.read_table(f).to_pylist()),
+                      key=repr)
+
+    met = sorted(glob.glob(os.path.join(L.metrics_path(out), "*.parquet")))
+    return {"lineage": rows(glob.glob(os.path.join(L.lineage_path(out),
+                                                   "*.parquet"))),
+            "manifests": sorted(os.listdir(L.snapshots_path(out))),
+            "metrics_files": len(met), "metrics": rows(met)}
+
+
+def _stream_slice(spark, fixture_dir):
+    return (spark.read.schema(PAGES).parquet(f"{fixture_dir}/pages.parquet")
+            .orderBy("url").limit(40))
+
+
+def test_a_replayed_stream_batch_commits_nothing(spark, fixture_dir):
+    """Spark replays a micro-batch whose commit ran but whose stream
+    checkpoint did not land, under the same run_id: the replay leaves the
+    lineage rows, manifests and metrics as they were, and launches no
+    Spark job."""
+    out = tempfile.mkdtemp(prefix="kg_replay_")
+    first = L.commit_slice(spark, _stream_slice(spark, fixture_dir),
+                           fixture_dir, out, "stream-0")
+    assert first["n_pages"] == 40
+    before = _store_state(out)
+    again, jobs = _jobs_in(spark, "replay", lambda: L.commit_slice(
+        spark, _stream_slice(spark, fixture_dir), fixture_dir, out,
+        "stream-0"))
+    assert again == {"run_id": "stream-0", "n_pages": 0, "n_triples": 0}
+    assert jobs == 0
+    assert _store_state(out) == before
+
+
+def test_a_replay_after_a_torn_commit_restores_metrics_once(spark,
+                                                           fixture_dir):
+    """The batch committed its lineage but lost its metrics file: the
+    replay's repair writes the metrics back once, and the replay adds no
+    lineage rows."""
+    import glob
+    import os
+
+    out = tempfile.mkdtemp(prefix="kg_replay_torn_")
+    L.commit_slice(spark, _stream_slice(spark, fixture_dir), fixture_dir,
+                   out, "stream-0")
+    before = _store_state(out)
+    for f in glob.glob(os.path.join(L.metrics_path(out), "*.parquet")):
+        os.remove(f)
+    spark.catalog.refreshByPath(L.metrics_path(out))
+    again = L.commit_slice(spark, _stream_slice(spark, fixture_dir),
+                           fixture_dir, out, "stream-0")
+    assert again["n_pages"] == 0
+    assert _store_state(out) == before
+
+
 def test_a_round_plans_its_slice_without_a_job(spark, fixture_dir,
                                               monkeypatch):
     """The pages are read with their declared schema, so a round over a

@@ -1,7 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB, compare row count, column
-names, each column's numpy dtype kind, and order-insensitive values
-(columns sorted by name)."""
+names, each column's exact numpy dtype (unless the pair is on
+``DTYPE_ALLOWED``), and order-insensitive values (columns sorted by
+name)."""
 
 from __future__ import annotations
 
@@ -18,6 +19,20 @@ SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
+# (query, column, Spark dtype, oracle dtype) -> why the widths differ.
+# Each pair was seen at sf0.001, sf0.01 and sf0.1; the values still
+# compare exactly.
+DTYPE_ALLOWED: dict[tuple[str, str, str, str], str] = {
+    ("kg_date_format", "yr", "int32", "int64"):
+        "Spark's year() is an INT, DuckDB's a BIGINT",
+    **{(q, c, "int32", "int64"):
+       "mention offsets are INT in the pipeline, BIGINT in the golden parquet"
+       for q in ("kg_mentions", "kg_linked_top1", "kg_linked_top1_fused",
+                 "kg_annotations")
+       for c in ("start", "end")},
+}
+
+
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
@@ -26,18 +41,21 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
-def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame,
+            query: str | None = None) -> list[str]:
     """What differs between a Spark result and its oracle's; [] when they
-    match.  Dtype kinds are compared (int64 vs float64 fails, int32 vs
-    int64 passes), values exactly."""
+    match.  Dtypes are compared exactly (int32 vs int64 fails) unless
+    ``(query, column, spark dtype, oracle dtype)`` is on ``DTYPE_ALLOWED``;
+    values exactly."""
     a, b = normalize(sdf), normalize(odf)
     if len(a) != len(b):
         return [f"rowcount {len(a)} vs {len(b)}"]
     if list(a.columns) != list(b.columns):
         return [f"cols {list(a.columns)} vs {list(b.columns)}"]
     status = [
-        f"dtype kind {c}: {a[c].dtype} vs {b[c].dtype}"
-        for c in a.columns if a[c].dtype.kind != b[c].dtype.kind
+        f"dtype {c}: {a[c].dtype} vs {b[c].dtype}"
+        for c in a.columns if a[c].dtype != b[c].dtype
+        and (query, c, str(a[c].dtype), str(b[c].dtype)) not in DTYPE_ALLOWED
     ]
     try:
         pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
@@ -80,7 +98,7 @@ def main(only: list[str] | None = None) -> int:
             failures.append((name, f"ORACLE ERROR: {ex}"))
             print(f"FAIL {name}: oracle error {str(ex)[:300]}")
             continue
-        status = compare(sdf, odf)
+        status = compare(sdf, odf, name)
         if status:
             failures.append((name, "; ".join(status)))
             print(f"FAIL {name}: {'; '.join(status)}")
