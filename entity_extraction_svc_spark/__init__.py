@@ -25,8 +25,10 @@ import zipimport
 __version__ = "0.1.0"
 
 
-class _StableZipImporter(zipimport.zipimporter):
-    """A zip importer whose directory is read once, when it is created.
+def _keep_worker_zip_directories() -> None:
+    """In a Spark Python worker (a task context is set), make every zip
+    importer's ``invalidate_caches`` do nothing; the driver, with no task
+    context, is left as it is.
 
     Spark's Python worker calls ``importlib.invalidate_caches()`` at the
     start of every task, and on CPython 3.11/3.12 each zip importer then
@@ -36,25 +38,12 @@ class _StableZipImporter(zipimport.zipimporter):
     before the UDF runs.  No archive on a worker's path changes in place:
     Spark's zips and jars are its install, the package zip is named by a
     hash of its contents (``session._package_zip``), and Spark refuses to
-    re-add a file name with other contents.  A newly added archive still
-    gets a fresh importer through the path hook."""
-
-    def invalidate_caches(self):
-        pass
-
-
-def _keep_worker_zip_directories() -> None:
-    """In a Spark Python worker (a task context is set), make every zip
-    importer on the path, and the zip path hook, a :class:`_StableZipImporter`.
-    The driver, with no task context, is left as it is."""
+    re-add a file name with other contents.  A newly added archive gets a
+    new importer, which reads its directory once when it is created."""
     ctx = sys.modules.get("pyspark.taskcontext")
     if ctx is None or ctx.TaskContext.get() is None:
         return
-    sys.path_hooks[:] = [_StableZipImporter if h is zipimport.zipimporter else h
-                         for h in sys.path_hooks]
-    for imp in sys.path_importer_cache.values():
-        if type(imp) is zipimport.zipimporter:
-            imp.__class__ = _StableZipImporter
+    zipimport.zipimporter.invalidate_caches = lambda self: None
 
 
 _keep_worker_zip_directories()

@@ -132,12 +132,13 @@ def commit_slice(spark: SparkSession, pages: DataFrame, kb_dir: str,
 
     A ``run_id`` that already has metrics commits nothing and launches no
     Spark job: Spark replays a micro-batch whose commit ran but whose
-    stream checkpoint did not land, under the same ``stream-<batch_id>``.
-    The check follows the repair, so a run torn between its lineage append
-    and its metrics write counts as committed too, while a run killed
-    before its lineage append has no metrics and commits again."""
-    repair_metrics(spark, out_dir)
-    if run_id in _metrics_run_ids(out_dir):
+    stream checkpoint did not land, under the same run_id
+    (``streaming.ingest.stream_run_id``).  So a run_id must name one
+    slice, never a second one.  The check follows the repair, so a run
+    torn between its lineage append and its metrics write counts as
+    committed too, while a run killed before its lineage append has no
+    metrics and commits again."""
+    if run_id in _repair(spark, out_dir)[1]:
         return {"run_id": run_id, "n_pages": 0, "n_triples": 0}
     # the slice is read by the fused pass and by the lineage rows: persist
     # it so both see the same pages (a limit is re-evaluated lazily)
@@ -240,21 +241,28 @@ def repair_metrics(spark: SparkSession, out_dir: str) -> int:
     writer per ``out_dir``: a concurrent run between its lineage commit and
     its metrics write would be counted twice.  Returns the number of
     backfilled (run_id, partition_id) rows."""
+    return _repair(spark, out_dir)[0]
+
+
+def _repair(spark: SparkSession, out_dir: str) -> tuple[int, set[str]]:
+    """:func:`repair_metrics`, also returning the run_ids that have
+    metrics once it is done, so a commit reads the metrics files once."""
     runs = {s["run_id"] for s in _read_snapshots(out_dir)
             if not s.get("compaction")}
-    missing = runs - _metrics_run_ids(out_dir)
+    have = _metrics_run_ids(out_dir)
+    missing = runs - have
     if not missing:
-        return 0
+        return 0, have
     # a missing lineage table is an expected state (nothing committed);
     # any other read failure propagates
     try:
         lin = spark.read.schema(LINEAGE).parquet(lineage_path(out_dir))
     except AnalysisException:
-        return 0
+        return 0, have
     rows = _metric_rows(lin.filter(F.col("run_id").isin(sorted(missing))))
     if rows:
         _write_metrics(spark, out_dir, rows)
-    return len(rows)
+    return len(rows), have | {r.run_id for r in rows}
 
 
 def _metrics_run_ids(out_dir: str) -> set[str]:

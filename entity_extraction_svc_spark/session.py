@@ -14,8 +14,9 @@ spark-core jar, the package zip that :func:`_ship_package` adds) re-read
 its archive's central directory: 0.1-0.4 s of CPU per task on a shared
 4-core VM.  None of those archives changes in place, so the package's
 first import in a worker makes its zip importers ignore the call
-(``_StableZipImporter`` in the package ``__init__``); the driver is left
-as it is, and the first task of each worker still pays the cost once.
+(``_keep_worker_zip_directories`` in the package ``__init__``); the
+driver is left as it is, and the first task of each worker still pays the
+cost once.
 """
 
 from __future__ import annotations

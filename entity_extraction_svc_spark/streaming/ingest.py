@@ -5,9 +5,9 @@ at corpus scale the natural streaming shape is *incremental ingestion*: new
 WARC page files land in a directory (or an Iceberg snapshot), a file-source
 stream picks them up, and each micro-batch runs the SAME fused batch plan
 via ``foreachBatch`` and commits it with the batch rounds' own commit,
-``plans.lineage.commit_slice``, under run_id ``stream-<batch_id>`` — so
-streaming and batch share one implementation and one output layout: triples
-append, snapshot manifest (``read_triples(as_of="stream-<batch_id>")``
+``plans.lineage.commit_slice``, under the run_id of :func:`stream_run_id`
+— so streaming and batch share one implementation and one output layout:
+triples append, snapshot manifest (``read_triples(as_of=<that run_id>)``
 time-travels to it), lineage append, metrics rows, and the metrics repair
 that heals a torn earlier commit.
 
@@ -17,7 +17,9 @@ on for continuous tailing.  Exactly-once here = file-source checkpointing
 (each input file enters exactly one micro-batch) + set-semantic triples +
 per-url lineage rows carrying the batch id.  A replayed micro-batch (its
 commit ran, its stream checkpoint did not land) finds its run_id in the
-metrics table and commits nothing.
+metrics table and commits nothing.  The run_id names the query as well as
+the batch: batch ids restart at 0 with every new checkpoint, and a second
+feed into the same out dir must not read as a replay of the first.
 
 ``windowed_page_counts`` is the event-time side: pages-per-window with a
 watermark on ``warc_ts`` to bound state and admit late pages.
@@ -42,6 +44,15 @@ def stream_pages(spark: SparkSession, src_dir: str) -> DataFrame:
     )
 
 
+def stream_run_id(query_id: str, batch_id: int) -> str:
+    """``stream-<query tag>-<batch_id>``: the run_id a micro-batch commits
+    under.  The tag is the first 12 hex digits of the streaming query's id,
+    which persists across restarts from the checkpoint and is new for a new
+    checkpoint, so a replayed batch keeps its run_id and another stream's
+    batch with the same id does not share it."""
+    return f"stream-{query_id.replace('-', '')[:12]}-{batch_id}"
+
+
 def ingest_stream(spark: SparkSession, src_dir: str, kb_dir: str, out_dir: str,
                   checkpoint_dir: str, source: str = "html",
                   available_now: bool = True):
@@ -51,8 +62,10 @@ def ingest_stream(spark: SparkSession, src_dir: str, kb_dir: str, out_dir: str,
     from entity_extraction_svc_spark.plans import lineage as L
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # the stream thread carries its query's id as a local property
+        qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         L.commit_slice(spark, batch_df, kb_dir, out_dir,
-                       run_id=f"stream-{batch_id}", source=source)
+                       run_id=stream_run_id(qid, batch_id), source=source)
 
     writer = (
         stream_pages(spark, src_dir)

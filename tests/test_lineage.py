@@ -518,7 +518,10 @@ def test_batch_rounds_and_stream_batches_share_one_commit(spark, fixture_dir):
 
     import pyarrow.parquet as pq
 
-    from entity_extraction_svc_spark.streaming.ingest import ingest_stream
+    from entity_extraction_svc_spark.streaming.ingest import (
+        ingest_stream,
+        stream_run_id,
+    )
 
     out = tempfile.mkdtemp(prefix="kg_mixed_")
     pages_path = f"{fixture_dir}/pages.parquet"
@@ -530,8 +533,9 @@ def test_batch_rounds_and_stream_batches_share_one_commit(spark, fixture_dir):
     todo = [i for i, u in enumerate(pages["url"].to_pylist()) if u not in done]
     src = tempfile.mkdtemp(prefix="kg_mixed_src_")
     pq.write_table(pages.take(todo[:60]), os.path.join(src, "part-0.parquet"))
-    ingest_stream(spark, src, fixture_dir, out,
-                  tempfile.mkdtemp(prefix="kg_mixed_ckpt_")).awaitTermination(300)
+    q = ingest_stream(spark, src, fixture_dir, out,
+                      tempfile.mkdtemp(prefix="kg_mixed_ckpt_"))
+    q.awaitTermination(300)
 
     last = L.run_checkpointed(spark, pages_path, fixture_dir, out)
     assert last["n_pages"] == 206 - 160
@@ -545,7 +549,8 @@ def test_batch_rounds_and_stream_batches_share_one_commit(spark, fixture_dir):
     met = spark.read.parquet(L.metrics_path(out))
     lin_ids = {r.run_id for r in lin.select("run_id").distinct().collect()}
     met_ids = {r.run_id for r in met.select("run_id").distinct().collect()}
-    assert met_ids == lin_ids and "stream-0" in met_ids and len(met_ids) == 3
+    assert met_ids == lin_ids and stream_run_id(q.id, 0) in met_ids
+    assert len(met_ids) == 3
     assert met.agg(F.sum("n_urls")).first()[0] == 206
 
 

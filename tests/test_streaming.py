@@ -15,6 +15,7 @@ from entity_extraction_svc_spark.plans import lineage as L
 from entity_extraction_svc_spark.streaming.ingest import (
     ingest_stream,
     stream_pages,
+    stream_run_id,
     windowed_page_counts,
 )
 
@@ -58,6 +59,71 @@ def test_stream_ingest_matches_goldens(spark, fixture_dir):
     spark.catalog.refreshByPath(L.lineage_path(out))
     assert spark.read.parquet(L.lineage_path(out)).count() == 206
 
+    shutil.rmtree(src)
+
+
+def _golden_triples(fixture_dir: str) -> set:
+    return {tuple(r) for r in duckdb.sql(
+        f"select subj, pred, obj from '{fixture_dir}/golden_triples.parquet'"
+    ).fetchall()}
+
+
+def test_two_streams_into_one_out_dir_commit_every_page(spark, fixture_dir):
+    """Two feeds with their own checkpoints commit into one out dir: both
+    start at batch id 0, and neither batch reads as a replay of the other,
+    so every page is linked and committed exactly once."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{fixture_dir}/pages.parquet")
+    half = table.num_rows // 2
+    out = tempfile.mkdtemp(prefix="kg_two_streams_out_")
+    queries = []
+    for sl in (table.slice(0, half), table.slice(half)):
+        src = tempfile.mkdtemp(prefix="kg_two_streams_src_")
+        pq.write_table(sl, os.path.join(src, "part-00000.parquet"))
+        q = ingest_stream(spark, src, fixture_dir, out,
+                          tempfile.mkdtemp(prefix="kg_two_streams_ckpt_"))
+        q.awaitTermination(300)
+        queries.append(q)
+
+    got = {(r.subj, r.pred, r.obj) for r in L.read_triples(spark, out).collect()}
+    assert got == _golden_triples(fixture_dir)
+    lin = spark.read.parquet(L.lineage_path(out))
+    assert lin.count() == lin.select("url").distinct().count() == 206
+    met = spark.read.parquet(L.metrics_path(out))
+    assert {r.run_id for r in met.select("run_id").distinct().collect()} == \
+        {stream_run_id(q.id, 0) for q in queries}
+    assert met.agg(F.sum("n_urls")).first()[0] == 206
+
+
+def test_a_replayed_micro_batch_commits_nothing(spark, fixture_dir):
+    """Batch 0 committed, but its stream checkpoint commit is lost: the
+    restarted query replays batch 0 under the same run_id, and the replay
+    adds no lineage row, manifest or metrics file."""
+    src = _staged_src(fixture_dir)
+    out = tempfile.mkdtemp(prefix="kg_replay_out_")
+    ckpt = tempfile.mkdtemp(prefix="kg_replay_ckpt_")
+    q = ingest_stream(spark, src, fixture_dir, out, ckpt)
+    q.awaitTermination(300)
+
+    def state():
+        return (spark.read.parquet(L.lineage_path(out)).count(),
+                sorted(os.listdir(L.snapshots_path(out))),
+                sorted(os.listdir(L.metrics_path(out))))
+
+    before = state()
+    assert before[0] == 206
+    # batch 0's entry in the commit log, and its checksum
+    for f in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", f))
+    q2 = ingest_stream(spark, src, fixture_dir, out, ckpt)
+    q2.awaitTermination(300)
+    assert q2.id == q.id
+    # the replay ran batch 0 again, and read none of its rows
+    assert [(p["batchId"], p["numInputRows"])
+            for p in q2.recentProgress] == [(0, 0)]
+    spark.catalog.refreshByPath(L.lineage_path(out))
+    assert state() == before
     shutil.rmtree(src)
 
 

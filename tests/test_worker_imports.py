@@ -1,10 +1,10 @@
 """A Spark Python worker's zip importers keep their directories across tasks.
 
 The worker calls ``importlib.invalidate_caches()`` at the start of every
-task; the package's first import in a worker makes every zip importer a
-``_StableZipImporter``, whose ``invalidate_caches`` does nothing.  The probe
-runs in its own session on local[2], from a directory outside the repo, so
-the workers import the package from the zip that ``get_spark`` ships."""
+task; the package's first import in a worker makes ``invalidate_caches``
+of every zip importer do nothing.  The probe runs in its own session on
+local[2], from a directory outside the repo, so the workers import the
+package from the zip that ``get_spark`` ships."""
 
 from __future__ import annotations
 
@@ -23,6 +23,7 @@ import zipimport
 
 sys.path.insert(0, sys.argv[1])
 hooks_before = list(sys.path_hooks)
+driver_method = zipimport.zipimporter.invalidate_caches
 
 import pandas as pd
 
@@ -38,11 +39,17 @@ def probe(batches):
     from entity_extraction_svc_spark import operators
     from entity_extraction_svc_spark.operators.dedup import _py_norm_tokens
 
-    stable = (all(type(i) is pkg._StableZipImporter
-                  for i in sys.path_importer_cache.values()
-                  if isinstance(i, zipimport.zipimporter))
-              and pkg._StableZipImporter in sys.path_hooks
-              and zipimport.zipimporter not in sys.path_hooks)
+    # the importers keep the directory they read when they were created:
+    # CPython 3.11's own invalidate_caches replaces ``_files`` with a re-read
+    zips = [i for i in sys.path_importer_cache.values()
+            if isinstance(i, zipimport.zipimporter)]
+    dirs = [i._files for i in zips]
+    for i in zips:
+        i.invalidate_caches()
+    stable = (len(zips) > 0
+              and all(i._files is d for i, d in zip(zips, dirs))
+              and zipimport.zipimporter.invalidate_caches.__module__
+              == pkg.__name__)
     fresh = next(f"{operators.__name__}.{m.name}"
                  for m in pkgutil.iter_modules(operators.__path__)
                  if f"{operators.__name__}.{m.name}" not in sys.modules)
@@ -62,20 +69,18 @@ rows = (spark.range(4).repartition(2)
 print(json.dumps({
     "rows": [r.asDict() for r in rows],
     "driver_hooks_unchanged": sys.path_hooks == hooks_before,
-    "driver_importers_plain": all(
-        type(i) is zipimport.zipimporter
-        for i in sys.path_importer_cache.values()
-        if isinstance(i, zipimport.zipimporter)),
+    "driver_method_unchanged":
+        zipimport.zipimporter.invalidate_caches is driver_method,
 }))
 spark.stop()
 '''
 
 
 def test_worker_zip_importers_ignore_invalidate_caches():
-    """Inside a worker every zip importer and the zip path hook are the
-    stable subclass, and a package module the worker has not imported yet
-    still imports after ``importlib.invalidate_caches()``; the driver's
-    path hooks and importers stay as they were."""
+    """Inside a worker every zip importer's ``invalidate_caches`` does
+    nothing, and a package module the worker has not imported yet still
+    imports after ``importlib.invalidate_caches()``; the driver's path hooks
+    and zip importer method stay as they were."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
         [sys.executable, "-c", PROBE, REPO], cwd=tempfile.mkdtemp(),
@@ -89,4 +94,4 @@ def test_worker_zip_importers_ignore_invalidate_caches():
         assert row["fresh"].startswith("entity_extraction_svc_spark.operators.")
         assert row["imported"]
         assert row["tokens"] == "ab c"
-    assert got["driver_hooks_unchanged"] and got["driver_importers_plain"]
+    assert got["driver_hooks_unchanged"] and got["driver_method_unchanged"]
