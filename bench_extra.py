@@ -116,6 +116,7 @@ def stage_fns(spark, sf_dir: str):
             noop(t)
 
     fns["substring_windows"] = lambda: noop(dd.substring_windows(docs))
+    fns["substring_dup_spans"] = lambda: noop(dd.substring_dup_spans(docs))
     fns["strip_dup_spans"] = lambda: noop(dd.strip_dup_spans(docs))
     fns["winnow_fingerprints"] = lambda: noop(
         dd.winnow_fingerprints(docs, k=6, w=4))

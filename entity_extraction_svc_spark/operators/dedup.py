@@ -13,15 +13,24 @@ the same code scales from the 500-row test table to a 100 TB corpus:
                 map-side partial aggregation).
 * MinHash+LSH:  shingle -> 60-bit md5-derived hash -> k universal-hash minima
                 computed per row in the tokenizer pass (narrow), then
-                banding: only the (band, band_hash) groupBy shuffles, and
-                only candidate pairs sharing a bucket are ever joined — the
-                classic near-dup recipe that avoids the O(n^2) cross join.
+                banding (:func:`_band_hashes`): only candidate pairs sharing
+                a bucket are ever joined — the classic near-dup recipe that
+                avoids the O(n^2) cross join.
 * SimHash:      per-bit majority vote over token hashes, packed to a 64-bit
                 key; Hamming-neighbor candidates via band equality.
+  MinHash, SimHash and the embedding LSH share one banded candidate join
+  (:func:`_band_pairs`: hot-bucket cap, bucket self-join, pair dedupe).
 * n-gram Jaccard: exact pairwise similarity, but only over pairs sharing at
                 least one shingle (inverted-index semi-join), with a
                 per-shingle document-frequency cap so stop-shingles don't
                 quadratically explode the candidate set at corpus scale.
+* substring:    k-token window rows (or winnowed fingerprints) from the
+                tokenizer pass; one dup-group aggregate
+                (:func:`_dup_groups`) for windows and fingerprints, and one
+                window pass over the hash for the duplicated occurrences
+                that spans and stripping consume (:func:`_dup_occurrences`);
+                stripping re-tokenizes only the documents it changes, in
+                one rebuild pass.
 
 All hashes derive from md5 so an external SQL engine (the DuckDB oracle)
 reproduces them bit-for-bit: h(s) = int(md5(s)[:15], 16), then
@@ -33,6 +42,7 @@ from __future__ import annotations
 import hashlib
 import re
 import zlib
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -319,32 +329,29 @@ def cross_dup_pairs(probe_rows: DataFrame, store_rows: DataFrame,
     )
 
 
-def lsh_buckets(signatures: DataFrame, id_col: str = "doc_id",
-                bands: int = 4) -> DataFrame:
-    """Band the signature: (band, band_hash, id).  Equal band_hash within a
-    band => candidate pair.  rows/band = len(sig)/bands."""
-    exploded = signatures.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(
-                                F.col("sig"),
-                                b * (F.size(F.col("sig")) / bands).cast("int") + 1,
-                                (F.size(F.col("sig")) / bands).cast("int"),
-                            ),
-                            lambda x: x.cast("string"),
-                        ),
-                    )
-                ),
-            )
-        ).alias("band", "band_hash"),
+def _band_pairs(rows: DataFrame, key_cols: list[str], id_col: str,
+                payload: str, max_bucket: int) -> DataFrame:
+    """The banded candidate join of the LSH pair detectors: (id_a, id_b,
+    <payload>_a, <payload>_b), one row per distinct pair with id_a < id_b
+    that shares a bucket of ``key_cols`` after the hot-bucket cap
+    (:func:`cap_lsh_buckets`).  The payload rides through the join, so a
+    caller scores the pair without a re-join to its signature table."""
+    rows = cap_lsh_buckets(rows, key_cols, max_bucket)
+    l, r = rows.alias("l"), rows.alias("r")
+    same_bucket = reduce(
+        lambda acc, c: acc & c,
+        [F.col(f"l.{k}") == F.col(f"r.{k}") for k in key_cols],
     )
-    return exploded
+    return (
+        l.join(r, same_bucket & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"l.{payload}").alias(f"{payload}_a"),
+            F.col(f"r.{payload}").alias(f"{payload}_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def minhash_dup_pairs(docs: DataFrame, text_col: str = "text",
@@ -366,23 +373,8 @@ def minhash_dup_pairs(docs: DataFrame, text_col: str = "text",
     buckets = minhash_band_rows(
         docs, text_col, id_col, num_hashes, bands, shingle_n
     ).drop("pfx")
-    buckets = cap_lsh_buckets(buckets, ["band", "band_hash"], max_bucket)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
     est = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+        _band_pairs(buckets, ["band", "band_hash"], id_col, "sig", max_bucket)
         .select(
             "id_a",
             "id_b",
@@ -442,24 +434,9 @@ def simhash_dup_pairs(docs: DataFrame, text_col: str = "text",
             )
         ).alias("band", "chunk"),
     )
-    chunks = cap_lsh_buckets(chunks, ["band", "chunk"], max_bucket)
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.simhash").alias("sh_a"),
-            F.col("r.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    cand = _band_pairs(chunks, ["band", "chunk"], id_col, "simhash",
+                       max_bucket)
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
@@ -653,23 +630,9 @@ def embedding_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.9,
     chunks = sigd.select(
         "id", "v", F.posexplode(band_sigs).alias("band", "chunk")
     )
-    chunks = cap_lsh_buckets(chunks, ["band", "chunk"], max_bucket)
-    l, r = chunks.alias("l"), chunks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-            F.col("l.v").alias("va"), F.col("r.v").alias("vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_pairs(chunks, ["band", "chunk"], "id", "v", max_bucket)
     return (
-        cand.withColumn("cos_sim", cosine(F.col("va"), F.col("vb")))
+        cand.withColumn("cos_sim", cosine(F.col("v_a"), F.col("v_b")))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
     )
@@ -1183,8 +1146,9 @@ def substring_windows(docs: DataFrame, text_col: str = "text",
 
     Scale shape: the tokenizer pass (:func:`token_rows`) emits the window
     rows row-locally, and the md5 runs in codegen over them; the frame is
-    |corpus tokens| rows, meant to be consumed by an aggregation in the
-    same stage, never materialized.  At 100 TB use
+    |corpus tokens| rows, consumed once by the aggregation or window over
+    the hash that follows (each substring operator runs the pass once),
+    never materialized.  At 100 TB use
     :func:`winnow_fingerprints` instead, which cuts the shuffled row count
     ~w/2-fold with a detection guarantee."""
     def windows(toks):
@@ -1199,18 +1163,16 @@ def substring_windows(docs: DataFrame, text_col: str = "text",
              F.md5("_win").alias("wh"))
 
 
-def substring_dup_windows(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", k: int = 8) -> DataFrame:
-    """Duplicated k-token windows: one row per window text that occurs
-    more than once in the corpus (across documents or repeated within
-    one), with occurrence count, distinct-document count, and the keeper
-    occurrence = lexicographic min (id, pos).  One hash-groupBy with
-    map-side partial aggregation; the shuffle carries one row per
-    distinct window per map task."""
-    occ = substring_windows(docs, text_col, id_col, k)
+def _dup_groups(occ: DataFrame, key: str, id_col: str) -> DataFrame:
+    """The dup-group aggregate over occurrence rows (id, pos, ``key``):
+    one row per ``key`` that occurs more than once, with the occurrence
+    count, the distinct-document count and the keeper occurrence =
+    lexicographic min (id, pos).  One hash-groupBy with map-side partial
+    aggregation; the shuffle carries one row per distinct key per map
+    task."""
     kp = F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p")))
     return (
-        occ.groupBy("wh")
+        occ.groupBy(key)
         .agg(
             F.count("*").alias("n_occ"),
             F.countDistinct(id_col).alias("n_docs"),
@@ -1218,9 +1180,43 @@ def substring_dup_windows(docs: DataFrame, text_col: str = "text",
         )
         .filter(F.col("n_occ") > 1)
         .select(
-            "wh", "n_occ", "n_docs",
+            key, "n_occ", "n_docs",
             F.col("_kp.i").alias("keeper_id"),
             F.col("_kp.p").alias("keeper_pos"),
+        )
+    )
+
+
+def substring_dup_windows(docs: DataFrame, text_col: str = "text",
+                          id_col: str = "doc_id", k: int = 8) -> DataFrame:
+    """Duplicated k-token windows: one row per window text that occurs
+    more than once in the corpus (across documents or repeated within
+    one), with occurrence count, distinct-document count, and the keeper
+    occurrence = lexicographic min (id, pos) (:func:`_dup_groups`)."""
+    return _dup_groups(substring_windows(docs, text_col, id_col, k), "wh",
+                       id_col)
+
+
+def _dup_occurrences(docs: DataFrame, text_col: str, id_col: str,
+                     k: int) -> DataFrame:
+    """The :func:`substring_windows` rows whose window text occurs more
+    than once, each with ``_is_keeper``: whether it is its hash's keeper
+    occurrence, the lexicographic min (id, pos).  One window pass over
+    the occurrences: the count and the keeper are window aggregates over
+    ``wh``, so the window stream is read once."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("wh")
+    kp = F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p")))
+    return (
+        substring_windows(docs, text_col, id_col, k)
+        .withColumn("_n", F.count("*").over(w))
+        .withColumn("_kp", kp.over(w))
+        .filter(F.col("_n") > 1)
+        .select(
+            id_col, "pos", "wlen",
+            ((F.col(id_col) == F.col("_kp.i"))
+             & (F.col("pos") == F.col("_kp.p"))).alias("_is_keeper"),
         )
     )
 
@@ -1234,19 +1230,12 @@ def substring_dup_spans(docs: DataFrame, text_col: str = "text",
     positions, so the merged span recovers the full run — the detector is
     exact for any duplicated substring of >= k tokens.
 
-    Two passes over the window stream (the groupBy that finds duplicated
-    hashes, then the semi-join back) — the same two-pass shape as the
-    suffix-array pipeline it replaces; the semi-join's build side is only
-    the DUPLICATED hash set, broadcast when small, and the islands window
-    shuffles only duplicated occurrences, partitioned by document."""
+    The duplicated occurrences come from one window pass over the window
+    stream (:func:`_dup_occurrences`, shuffled by hash), and the islands
+    window shuffles only those occurrences, partitioned by document."""
     from pyspark.sql.window import Window
 
-    occ = substring_windows(docs, text_col, id_col, k)
-    dup_keys = (
-        occ.groupBy("wh").agg(F.count("*").alias("_n"))
-        .filter("_n > 1").select("wh")
-    )
-    dups = occ.join(dup_keys, "wh", "left_semi")
+    dups = _dup_occurrences(docs, text_col, id_col, k)
     win = Window.partitionBy(id_col).orderBy("pos")
     isl = dups.withColumn(
         "_grp", F.col("pos") - F.row_number().over(win)
@@ -1285,60 +1274,51 @@ def strip_dup_spans(docs: DataFrame, text_col: str = "text",
     removable occurrence overlapping a keeper loses only its unprotected
     tokens (partial removal — the price of the guarantee).
 
-    Returns the input plus ``out_col`` (normalized-token text).  Covered
-    token indexes are exploded only for DUPLICATED occurrences (volume =
-    duplicated tokens, not corpus tokens), and the reassembly groupBy
-    shuffles each affected document once; untouched documents ride
-    through the final left join with out_col = normalized text."""
-    occ = substring_windows(docs, text_col, id_col, k)
-    keepers = substring_dup_windows(docs, text_col, id_col, k).select(
-        "wh",
-        F.col("keeper_id").alias("_ki"), F.col("keeper_pos").alias("_kp"),
+    Returns the input plus ``out_col`` (normalized-token text).  The
+    duplicated occurrences (:func:`_dup_occurrences`) are collected per
+    document as keeper and removable window starts — every window of a
+    document has the same length, min(k, tokens) — and only the documents
+    with a removable occurrence are rebuilt, in one Arrow pass that
+    re-tokenizes their text (:func:`_py_norm_tokens`) and joins the tokens
+    outside the removable-minus-protected positions.  A document whose
+    every position is protected, and every untouched one, keeps its
+    normalized text."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    starts = (
+        _dup_occurrences(docs, text_col, id_col, k)
+        .groupBy(id_col)
+        .agg(
+            F.collect_list(F.when(F.col("_is_keeper"), F.col("pos")))
+            .alias("_keep"),
+            F.collect_list(F.when(~F.col("_is_keeper"), F.col("pos")))
+            .alias("_drop"),
+        )
+        .filter(F.size("_drop") > 0)
     )
-    tagged = occ.join(keepers, "wh")
-    is_keeper = (
-        (F.col(id_col) == F.col("_ki")) & (F.col("pos") == F.col("_kp"))
-    )
-    span = F.explode(
-        F.sequence(F.col("pos"), F.col("pos") + F.col("wlen") - 1)
-    ).alias("_tp")
-    protected = tagged.filter(is_keeper).select(id_col, span).distinct()
-    covered = (
-        tagged.filter(~is_keeper).select(id_col, span).distinct()
-        .join(protected, [id_col, "_tp"], "left_anti")
-    )
-    toks = token_rows(
-        docs.select(id_col, text_col), lambda toks: (toks,),
-        "_toks array<string>", text_col,
-    ).select(
-        id_col, F.posexplode("_toks").alias("_p0", "_tok"),
-    ).select(id_col, (F.col("_p0") + 1).alias("_tp"), "_tok")
-    kept = toks.join(covered, [id_col, "_tp"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_tp", "_tok"))),
-                lambda s: s["_tok"],
-            ),
-        ).alias("_rb")
-    )
-    # a doc whose every token was removed has no `kept` rows at all, so a
-    # bare coalesce would silently resurrect its original text — join the
-    # affected-id set to tell "untouched" apart from "fully stripped"
-    affected = covered.select(id_col).distinct().withColumn(
-        "_aff", F.lit(True)
-    )
+    affected = docs.select(id_col, text_col).join(starts, id_col)
+
+    def rebuild(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for text, keep, drop in zip(pdf[text_col], pdf["_keep"],
+                                        pdf["_drop"]):
+                toks = _py_norm_tokens(text)
+                wl = min(k, len(toks))
+                cut = ({p + j for p in drop for j in range(wl)}
+                       - {p + j for p in keep for j in range(wl)})
+                out.append(" ".join(t for i, t in enumerate(toks, 1)
+                                    if i not in cut) if cut else None)
+            yield pd.DataFrame({id_col: pdf[id_col].values, "_rb": out})
+
+    rebuilt = affected.mapInPandas(rebuild, StructType([
+        docs.schema[id_col], StructField("_rb", StringType())]))
     return (
         docs.join(rebuilt, id_col, "left")
-        .join(affected, id_col, "left")
-        .withColumn(
-            out_col,
-            F.when(
-                F.col("_aff").isNotNull(), F.coalesce("_rb", F.lit(""))
-            ).otherwise(_norm_text(text_col)),
-        )
-        .drop("_rb", "_aff")
+        .withColumn(out_col, F.coalesce("_rb", _norm_text(text_col)))
+        .drop("_rb")
     )
 
 
@@ -1380,26 +1360,13 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
 def winnow_dup_groups(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 8,
                       w: int = 4) -> DataFrame:
-    """Duplicated winnowed fingerprints: hash-groupBy over the selected
-    set — the scale-path analogue of :func:`substring_dup_windows` (same
-    output shape keyed by the integer fingerprint), feeding the same
-    span-merge/resolution machinery on ~2/(w+1) of the shuffle volume."""
-    fp = winnow_fingerprints(docs, text_col, id_col, k, w)
-    kp = F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p")))
-    return (
-        fp.groupBy("h")
-        .agg(
-            F.count("*").alias("n_occ"),
-            F.countDistinct(id_col).alias("n_docs"),
-            kp.alias("_kp"),
-        )
-        .filter(F.col("n_occ") > 1)
-        .select(
-            "h", "n_occ", "n_docs",
-            F.col("_kp.i").alias("keeper_id"),
-            F.col("_kp.p").alias("keeper_pos"),
-        )
-    )
+    """Duplicated winnowed fingerprints: the dup-group aggregate
+    (:func:`_dup_groups`) over the selected set — the scale-path analogue
+    of :func:`substring_dup_windows` (same output shape keyed by the
+    integer fingerprint), feeding the same span-merge/resolution machinery
+    on ~2/(w+1) of the shuffle volume."""
+    return _dup_groups(winnow_fingerprints(docs, text_col, id_col, k, w),
+                       "h", id_col)
 
 
 def line_dedup(docs: DataFrame, text_col: str = "text",

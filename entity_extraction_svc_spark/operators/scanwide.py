@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame
 log = logging.getLogger(__name__)
 
 
-def widen_scan(df: DataFrame, min_parts: int | None = None,
-               min_bytes: int | None = None) -> DataFrame:
+def widen_scan(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism when its
     current plan yields fewer partitions; identity otherwise.
 
@@ -41,8 +40,7 @@ def widen_scan(df: DataFrame, min_parts: int | None = None,
     compute-heavy and the exchange's fixed cost would dominate.  Callers
     with byte-independent per-row cost (hashing pipelines, Python batch
     passes) should leave it unset."""
-    sc = df.sparkSession.sparkContext
-    target = int(min_parts or sc.defaultParallelism)
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         if min_bytes is not None:
             est = df._jdf.queryExecution().optimizedPlan().stats() \

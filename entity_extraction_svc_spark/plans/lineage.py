@@ -230,14 +230,17 @@ def repair_metrics(spark: SparkSession, out_dir: str) -> int:
     its metrics write) only leaves that run without metrics, and a url
     reprocessed after a crash is counted in exactly one committed run.
 
-    The candidates are the run_ids of the non-compaction snapshot manifests
-    minus the run_ids in the metrics table, both read on the driver from
-    small files.  On a consistent store there is none and the repair
-    launches no Spark job; otherwise it aggregates the candidates' lineage
-    rows and writes them as a round does.  A run killed before its lineage
-    commit has no rows and stays a candidate, so a store holding one pays a
-    filtered lineage scan in every later repair.  :func:`commit_slice` runs
-    the repair first, so the next round heals a torn state.  It assumes one
+    The candidates are the run_ids of the snapshot manifests written after
+    the latest compaction minus the run_ids in the metrics table, both read
+    on the driver from small files.  On a consistent store there is none
+    and the repair launches no Spark job; otherwise it aggregates the
+    candidates' lineage rows and writes them as a round does.
+    :func:`commit_slice` runs the repair first, so the next round heals a
+    torn state, and :func:`compact_triples` and :func:`retract_triples` run
+    it before their manifest, so every run before a compaction has its
+    metrics.  A run killed before its lineage commit has no rows: it stays
+    a candidate, and costs each repair a filtered lineage scan, only until
+    the next compaction.  It assumes one
     writer per ``out_dir``: a concurrent run between its lineage commit and
     its metrics write would be counted twice.  Returns the number of
     backfilled (run_id, partition_id) rows."""
@@ -247,8 +250,9 @@ def repair_metrics(spark: SparkSession, out_dir: str) -> int:
 def _repair(spark: SparkSession, out_dir: str) -> tuple[int, set[str]]:
     """:func:`repair_metrics`, also returning the run_ids that have
     metrics once it is done, so a commit reads the metrics files once."""
-    runs = {s["run_id"] for s in _read_snapshots(out_dir)
-            if not s.get("compaction")}
+    snaps = _read_snapshots(out_dir)
+    last = max((s["seq"] for s in snaps if s.get("compaction")), default=-1)
+    runs = {s["run_id"] for s in snaps if s["seq"] > last}
     have = _metrics_run_ids(out_dir)
     missing = runs - have
     if not missing:
@@ -299,6 +303,22 @@ def _parquet_files(d: str) -> set[str]:
         return set()
     return {os.path.join(d, f) for f in os.listdir(d)
             if f.endswith(".parquet") and not f.startswith(("_", "."))}
+
+
+def _move_into(src: str, dst_dir: str, prefix: str) -> list[str]:
+    """Rename the parquet files Spark wrote under ``src`` into ``dst_dir``
+    as ``<prefix>-<i>.parquet``, in name order; returns their new paths.
+    The prefix carries the attempt's uuid, so a rerun after a crash
+    between the moves and the manifest never renames onto a file of the
+    crashed attempt, which the rerun then deletes as old (a manifest
+    pointing at nothing = data loss)."""
+    moved = []
+    for i, f in enumerate(sorted(
+            x for x in os.listdir(src) if x.endswith(".parquet"))):
+        dst = os.path.join(dst_dir, f"{prefix}-{i:05d}.parquet")
+        os.replace(os.path.join(src, f), dst)
+        moved.append(dst)
+    return moved
 
 
 def vacuum_triples(spark: SparkSession, out_dir: str) -> dict:
@@ -407,20 +427,11 @@ def compact_triples(spark: SparkSession, out_dir: str,
         .repartition(num_buckets, "subj")
         .write.mode("overwrite").parquet(tmp)
     )
-    # dst names carry this ATTEMPT's uuid, not just seq: a rerun after a
-    # crash between the moves and the manifest must not collide with the
-    # crashed attempt's files — with seq-only names the rerun would
-    # os.replace onto paths that are also in `old` and then delete its own
-    # freshly committed files (manifest pointing at nothing = data loss)
-    moved = []
-    attempt = run_id.split("-")[-1]
-    for i, f in enumerate(sorted(
-            x for x in os.listdir(tmp) if x.endswith(".parquet"))):
-        dst = os.path.join(p, f"compact-{seq:06d}-{attempt}-{i:05d}.parquet")
-        os.replace(os.path.join(tmp, f), dst)
-        moved.append(dst)
+    moved = _move_into(tmp, p, f"compact-{seq:06d}-{run_id.split('-')[-1]}")
     # manifest lands while BOTH file generations are live: a crash here
-    # only costs disk (duplicate rows), never rows
+    # only costs disk (duplicate rows), never rows.  The repair before it
+    # leaves no run the later repairs would have to look back for
+    _repair(spark, out_dir)
     _write_snapshot(out_dir, run_id, seq=seq, files=moved, compaction=True)
     for f in old - set(moved):
         os.remove(f)
@@ -473,12 +484,7 @@ def retract_triples(spark: SparkSession, out_dir: str,
         .repartition(num_buckets, "subj")
         .write.mode("overwrite").parquet(tmp)
     )
-    moved = []
-    for i, f in enumerate(sorted(
-            x for x in os.listdir(tmp) if x.endswith(".parquet"))):
-        dst = os.path.join(p, f"retract-{seq:06d}-{attempt}-{i:05d}.parquet")
-        os.replace(os.path.join(tmp, f), dst)
-        moved.append(dst)
+    moved = _move_into(tmp, p, f"retract-{seq:06d}-{attempt}")
     # removed-rows sidecar BEFORE the manifest that references it (a
     # kill in between leaves a harmless orphan file, never a manifest
     # pointing at nothing) — this is what makes the pre-retraction state
@@ -488,13 +494,9 @@ def retract_triples(spark: SparkSession, out_dir: str,
     side_tmp = os.path.join(out_dir, f"_retract_side_tmp_{seq}")
     actually_removed.coalesce(1).write.mode("overwrite").parquet(side_tmp)
     os.makedirs(side_dir, exist_ok=True)
-    side_files = []
-    for i, f in enumerate(sorted(
-            x for x in os.listdir(side_tmp) if x.endswith(".parquet"))):
-        dst = os.path.join(side_dir, f"removed-{seq:06d}-{attempt}-{i:05d}.parquet")
-        os.replace(os.path.join(side_tmp, f), dst)
-        side_files.append(dst)
+    side_files = _move_into(side_tmp, side_dir, f"removed-{seq:06d}-{attempt}")
     shutil.rmtree(side_tmp, ignore_errors=True)
+    _repair(spark, out_dir)  # as in compact_triples
     _write_snapshot(out_dir, run_id, seq=seq, files=moved, compaction=True,
                     retraction=True, removed_files=side_files)
     for f in old - set(moved):

@@ -431,6 +431,43 @@ def test_repair_metrics_on_a_consistent_store_runs_no_job(spark, fixture_dir):
             .orderBy("partition_id").collect()] == run1
 
 
+def test_a_compaction_retires_a_phantom_run(spark, fixture_dir):
+    """A run killed between its snapshot manifest and its lineage commit
+    has no lineage rows, so it stays a repair candidate and costs each
+    repair a lineage scan.  A compaction repairs the store before its
+    manifest and the repair looks no further back than the latest
+    compaction: after it the repair launches no Spark job, and a run torn
+    before it (lineage committed, metrics lost) keeps its metrics."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = tempfile.mkdtemp(prefix="kg_phantom_")
+    pages_path = f"{fixture_dir}/pages.parquet"
+    L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
+    L._write_snapshot(out, "deadbeefcafe", seq=len(L._read_snapshots(out)),
+                      files=[])
+    s2 = L.run_checkpointed(spark, pages_path, fixture_dir, out, max_docs=60)
+    n, jobs = _jobs_in(spark, "repair-phantom",
+                       lambda: L.repair_metrics(spark, out))
+    assert n == 0 and jobs > 0
+
+    met = spark.read.parquet(L.metrics_path(out))
+    want = sorted((r.asDict() for r in met.collect()), key=repr)
+    for f in glob.glob(os.path.join(L.metrics_path(out), "*.parquet")):
+        if pq.read_table(f, columns=["run_id"])["run_id"][0].as_py() == s2["run_id"]:
+            os.remove(f)
+    spark.catalog.refreshByPath(L.metrics_path(out))
+
+    L.compact_triples(spark, out, num_buckets=4)
+    n, jobs = _jobs_in(spark, "repair-compacted",
+                       lambda: L.repair_metrics(spark, out))
+    assert (n, jobs) == (0, 0)
+    met = spark.read.parquet(L.metrics_path(out))
+    assert sorted((r.asDict() for r in met.collect()), key=repr) == want
+
+
 def _store_state(out: str) -> dict:
     """The committed store as files and rows: the lineage rows, the
     snapshot manifests and the metrics files with their rows."""

@@ -186,3 +186,18 @@ def test_strip_protects_keepers_under_overlap(spark):
     # unprotected token r is removed (the documented partial removal),
     # leaving exactly the protected keeper block
     assert out["a"] == "p q"
+
+
+def _python_passes(df) -> int:
+    """The ``MapInPandas`` passes in ``df``'s final adaptive plan, after
+    an action (the plan's text up to its ``== Initial Plan ==``)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].count("MapInPandas")
+
+
+def test_substring_ops_run_one_window_pass(spark, corpus):
+    # the window stream is read once: spans tokenize once, and stripping
+    # adds only the rebuild of the affected documents
+    assert _python_passes(substring_dup_spans(corpus, k=4)) == 1
+    assert _python_passes(strip_dup_spans(corpus, k=4)) <= 2

@@ -197,9 +197,8 @@ def test_hot_bucket_cap_bounds_candidates(spark):
     pairs.  Distinct docs in small buckets are unaffected."""
     from entity_extraction_svc_spark.operators.dedup import (
         hot_bucket_report,
-        lsh_buckets,
+        minhash_band_rows,
         minhash_dup_pairs,
-        minhash_signatures,
         simhash_dup_pairs,
     )
 
@@ -221,8 +220,8 @@ def test_hot_bucket_cap_bounds_candidates(spark):
     assert {(r.id_a, r.id_b) for r in capped.collect()} >= {(1000, 1001)}
 
     # the dropped work is accounted for, not silent
-    sigs = minhash_signatures(docs)
-    report = hot_bucket_report(lsh_buckets(sigs), ["band", "band_hash"], 50)
+    report = hot_bucket_report(minhash_band_rows(docs), ["band", "band_hash"],
+                               50)
     assert report.count() >= 1
     assert report.agg(F.max("bucket_size")).first()[0] == 120
 
