@@ -27,6 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Undirected edges up to which :func:`connected_components` runs
+#: single-task union-find instead of the distributed loop.
+LOCAL_MAX_EDGES = 5_000_000
+#: Affected-subgraph nodes up to which :func:`cc_delta` broadcasts the
+#: node slice it lifts the surviving edges with.
+SUBGRAPH_BROADCAST_NODES = 5_000_000
+
 
 def alias_edges(kb_entities: DataFrame, kb_aliases: DataFrame) -> DataFrame:
     """Bipartite edges (alias-surface node, entity node), normalized."""
@@ -84,24 +91,25 @@ def _cc_local(sym: DataFrame) -> DataFrame:
     return sym.repartition(1).mapInPandas(_uf, f"node {node_t}, comp {node_t}")
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20,
-                         local_max_edges: int = 5_000_000) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """(node, component) for every node in the undirected edge list; the
     component id is the lexicographically smallest node label in it.
 
-    Adaptive execution: an edge list at or under ``local_max_edges``
+    Adaptive execution: an edge list at or under ``LOCAL_MAX_EDGES``
     (directed, post-symmetrization ~2x) runs single-task union-find — one
     job, flat latency, plenty of headroom for dup graphs that are a few
     percent of even a 10^9-doc corpus.  Bigger graphs (alias clustering
     over a full KB, pathological dup rates) take the distributed
     hash-min + pointer-jumping loop below, whose per-round shuffles are
     the O(log diameter) scale path.  The one count() that picks the path
-    is a partial-agg job over the already-persisted edge list."""
+    is a partial-agg job over the already-persisted edge list.  The
+    distributed loop raises ``RuntimeError`` when labels still change
+    after ``max_iter`` rounds (truncated labels split components)."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     sym = sym.persist()
-    if sym.count() <= 2 * local_max_edges:
+    if sym.count() <= 2 * LOCAL_MAX_EDGES:
         out = _cc_local(sym).localCheckpoint(eager=True)
         sym.unpersist()
         return out
@@ -157,6 +165,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     sym.unpersist()
     return labels
 
@@ -299,8 +311,7 @@ def mine_aliases_oracle_sql(linked_sql: str, aliases_sql: str | None = None,
 
 def cc_delta(labels: DataFrame, add_edges: DataFrame | None = None,
              remove_edges: DataFrame | None = None,
-             edges: DataFrame | None = None,
-             local_max_edges: int = 5_000_000) -> DataFrame:
+             edges: DataFrame | None = None) -> DataFrame:
     """Incremental maintenance of :func:`connected_components` under edge
     edits — the alias-cluster twin of ``graphwalk.closure_delta`` /
     ``chain.forward_chain_delta``, so a daily crawl's new anchor-text
@@ -373,14 +384,12 @@ def cc_delta(labels: DataFrame, add_edges: DataFrame | None = None,
             .select(F.col("node").alias("src"))
             .localCheckpoint(eager=True)
         )
-        if sub_nodes.count() <= 5_000_000:
+        if sub_nodes.count() <= SUBGRAPH_BROADCAST_NODES:
             sub_edges = survivors.join(F.broadcast(sub_nodes), "src",
                                        "left_semi")
         else:
             sub_edges = survivors.join(sub_nodes, "src", "left_semi")
-        recomputed = connected_components(
-            sub_edges, local_max_edges=local_max_edges
-        )
+        recomputed = connected_components(sub_edges)
         out = (
             out.join(F.broadcast(affected), "comp", "left_anti")
             .unionByName(recomputed)
@@ -414,9 +423,7 @@ def cc_delta(labels: DataFrame, add_edges: DataFrame | None = None,
             .select(F.col("cs").alias("src"), F.col("cd").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
         )
-        merged = connected_components(
-            merge_edges, local_max_edges=local_max_edges
-        )
+        merged = connected_components(merge_edges)
         rewire = merged.filter(F.col("node") != F.col("comp")).select(
             F.col("node").alias("comp"), F.col("comp").alias("new_comp")
         ).localCheckpoint(eager=True)

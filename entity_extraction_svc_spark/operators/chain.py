@@ -29,19 +29,21 @@ never exchange the accumulated result per round):
   * derived facts accumulate in a small OVERLAY kept separate from the
     base: body joins source from base ∪ overlay with the delta side
     broadcast by AQE, and the overlay-side dedup anti-join broadcasts the
-    overlay.  When the overlay outgrows ``fold_rows`` it is folded into
+    overlay.  When the overlay outgrows ``FOLD_ROWS`` it is folded into
     the persisted base (one materialization, geometrically amortized) —
     base + overlay is the same at-rest/at-delta split the maintained
     closure store uses (plans/maintain.py);
   * semi-naive: round k's candidates come from rule bodies with one leg
     restricted to round k-1's delta and the remaining legs on the full
-    known set (the standard union-over-leg-positions scheme; overlap
-    between position choices is deduped by the distinct + anti-join, so
-    completeness needs no triangular prev/known bookkeeping);
+    known set (the standard union-over-leg-positions scheme, written once
+    in ``_delta_heads`` for forward_chain, forward_chain_delta and the
+    retraction's over-delete; overlap between position choices is deduped
+    by the distinct + anti-join, so completeness needs no triangular
+    prev/known bookkeeping);
   * per-round driver work is one emptiness probe (``limit(1).count()``,
     the sanctioned scalar action of every iterative operator here) and
-    ``localCheckpoint`` keeps planner cost O(1) across rounds
-    (canonicalize.py:108-112 measurement).
+    ``localCheckpoint`` keeps planner cost O(1) across rounds (the
+    measurement in pagerank.py's module docstring).
 
 Budget honesty: the working set is base + derived.  RDFS-style rule sets
 derive O(|instances| x taxonomy-depth) facts — the same "the closure size
@@ -65,6 +67,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _COLS = ("subj", "pred", "obj")
+
+#: Candidate (and overlay) rows up to which a round's dedup anti-joins run
+#: against broadcast slices; larger rounds take plain shuffle anti-joins.
+BROADCAST_ROWS = 2_000_000
+#: Overlay rows past which :func:`forward_chain` folds the derived overlay
+#: into its persisted base.
+FOLD_ROWS = 2_000_000
 
 
 def _check_rule(body: list[tuple[str, str, str]],
@@ -98,6 +107,14 @@ def _order_legs(body: list[tuple[str, str, str]], start: int) -> list[int]:
         bound |= _leg_vars(body[nxt])
         rest.remove(nxt)
     return order
+
+
+def _check_rules(rules) -> None:
+    """Validate every rule up front (head variables bound, body
+    connected), not mid-loop."""
+    for body, head in rules:
+        _check_rule(body, head)
+        _order_legs(body, 0)
 
 
 def _leg_frame(df: DataFrame, leg: tuple[str, str, str]) -> DataFrame:
@@ -137,13 +154,28 @@ def _eval_rule(body: list[tuple[str, str, str]],
     return acc.select(*terms)
 
 
+def _delta_heads(rules, delta: DataFrame, known: DataFrame,
+                 first_leg_only: bool = False) -> DataFrame:
+    """One semi-naive step: the union, over every rule and every body leg
+    position i, of the rule evaluated with leg i on ``delta`` and the
+    other legs on ``known``.  ``first_leg_only`` evaluates position 0
+    alone — the naive round, where ``delta`` is ``known``."""
+    parts = []
+    for body, head in rules:
+        for i in range(1 if first_leg_only else len(body)):
+            sources = [delta if j == i else known for j in range(len(body))]
+            parts.append(_eval_rule(body, head, sources, delta_leg=i))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def forward_chain(triples: DataFrame,
                   rules: list[tuple[list[tuple[str, str, str]],
                                     tuple[str, str, str]]],
                   max_rounds: int = 32,
-                  fold_rows: int = 2_000_000,
-                  derived_only: bool = False,
-                  broadcast_rows: int = 2_000_000) -> DataFrame:
+                  derived_only: bool = False) -> DataFrame:
     """Materialize the fixpoint of ``rules`` over ``triples``.
 
     ``rules``: (body, head) pairs; body = list of (s, p, o) patterns with
@@ -158,9 +190,7 @@ def forward_chain(triples: DataFrame,
     Raises after ``max_rounds`` without convergence (rule sets over a
     cyclic value space can diverge; a bounded raise beats a silent
     truncation — the k-core rule)."""
-    for body, head in rules:
-        _check_rule(body, head)
-        _order_legs(body, 0)  # connectivity check up front, not mid-loop
+    _check_rules(rules)
     spark = triples.sparkSession
 
     base = triples.select(*_COLS).distinct().persist()
@@ -176,16 +206,7 @@ def forward_chain(triples: DataFrame,
         # semi-naive delta leg; round 0 is the naive full evaluation
         # (delta == known) so a single position choice covers it
         known = base.unionByName(overlay) if overlay is not empty else base
-        parts = []
-        for body, head in rules:
-            positions = range(len(body)) if not first else (0,)
-            for i in positions:
-                sources = [delta if j == i else known
-                           for j in range(len(body))]
-                parts.append(_eval_rule(body, head, sources, delta_leg=i))
-        cand = parts[0]
-        for p in parts[1:]:
-            cand = cand.unionByName(p)
+        cand = _delta_heads(rules, delta, known, first_leg_only=first)
         # dedup: pre-slice base to the candidate keys (broadcast semi-join
         # — a shuffle-free scan of the persisted base), then anti-join the
         # candidates against that delta-sized slice and the overlay, both
@@ -194,16 +215,16 @@ def forward_chain(triples: DataFrame,
         # (VERDICT r5 #2): a BOOTSTRAP's round 0 evaluates every rule head
         # over the full base — at a 10^10-fact KB that candidate set blows
         # the 8 GB broadcast cap outright — so rounds beyond
-        # ``broadcast_rows`` dedup via plain shuffle anti-joins instead
+        # ``BROADCAST_ROWS`` dedup via plain shuffle anti-joins instead
         # (one base exchange, unavoidable and amortized at that scale);
         # delta-sized rounds — all of maintenance, and every bootstrap
         # round near the fixpoint — keep the shuffle-free broadcast path.
         cand = cand.distinct().localCheckpoint(eager=True)
-        if cand.count() <= broadcast_rows:
+        if cand.count() <= BROADCAST_ROWS:
             base_hits = base.join(F.broadcast(cand), list(_COLS), "left_semi")
             new = cand.join(F.broadcast(base_hits), list(_COLS), "left_anti")
             if overlay is not empty:
-                if n_overlay <= broadcast_rows:
+                if n_overlay <= BROADCAST_ROWS:
                     new = new.join(F.broadcast(overlay), list(_COLS),
                                    "left_anti")
                 else:
@@ -228,7 +249,7 @@ def forward_chain(triples: DataFrame,
         overlay = (new if overlay is empty
                    else overlay.unionByName(new).localCheckpoint(eager=True))
         n_overlay = overlay.count()
-        if n_overlay > fold_rows:
+        if n_overlay > FOLD_ROWS:
             # fold: one materialization of base ∪ overlay (disjoint by
             # construction — no re-distinct), geometrically amortized
             folded = base.unionByName(overlay).persist()
@@ -257,20 +278,18 @@ def forward_chain_delta(entailed: DataFrame, new_facts: DataFrame,
     them (``entailed`` ∪ result is the fixpoint over the unioned base —
     the invariant the tests pin against a full recompute).
 
-    Same per-round shape as forward_chain minus the naive round 0: the
-    delta starts as the genuinely-new facts (semi-slice + anti-join
-    against the persisted entailment — scan, no shuffle), every rule
-    evaluates delta-sided, and each round's candidates dedup against
-    entailment + the accumulated additions.  Cost scales with the
+    The delta starts as the genuinely-new facts (semi-slice + anti-join
+    against the persisted entailment — scan, no shuffle), every round is
+    the delta-sided step over all leg positions (no naive round 0), and
+    each round's candidates dedup against entailment + the accumulated
+    additions.  Cost scales with the
     CONSEQUENCES of the delta, not with |entailed| — a few thousand new
     pages against a billion-fact store never exchange the store.
 
     Deletions are :func:`forward_chain_retract` (DRed); a combined
     remove+add interval retracts FIRST against the pre-addition state,
     then cascades the additions — the maintain_closure ordering lesson."""
-    for body, head in rules:
-        _check_rule(body, head)
-        _order_legs(body, 0)
+    _check_rules(rules)
     spark = entailed.sparkSession
 
     base = entailed.select(*_COLS).distinct().persist()
@@ -287,17 +306,10 @@ def forward_chain_delta(entailed: DataFrame, new_facts: DataFrame,
         if overlay is empty:
             base.unpersist()
             return empty
-        known = base.unionByName(overlay)
-        parts = []
-        for body, head in rules:
-            for i in range(len(body)):
-                sources = [delta if j == i else known
-                           for j in range(len(body))]
-                parts.append(_eval_rule(body, head, sources, delta_leg=i))
-        cand = parts[0]
-        for p in parts[1:]:
-            cand = cand.unionByName(p)
-        cand = cand.distinct().localCheckpoint(eager=True)
+        cand = (
+            _delta_heads(rules, delta, base.unionByName(overlay))
+            .distinct().localCheckpoint(eager=True)
+        )
         base_hits = base.join(F.broadcast(cand), list(_COLS), "left_semi")
         new = (
             cand.join(F.broadcast(base_hits), list(_COLS), "left_anti")
@@ -398,10 +410,7 @@ def forward_chain_retract(entailed: DataFrame, base: DataFrame,
     tests.  Budget: |D| — a retraction whose consequences span the whole
     entailment (removing a root taxonomy edge) degenerates to recompute
     cost, the honest bound every DRed shares."""
-    for body, head in rules:
-        _check_rule(body, head)
-        _order_legs(body, 0)
-    spark = entailed.sparkSession
+    _check_rules(rules)
     ent = entailed.select(*_COLS).distinct().persist()
     ent.count()
     base_now = base.select(*_COLS).distinct()
@@ -412,17 +421,8 @@ def forward_chain_retract(entailed: DataFrame, base: DataFrame,
     dset = rm
     delta = rm
     for _ in range(max_rounds):
-        parts = []
-        for body, head in rules:
-            for i in range(len(body)):
-                sources = [delta if j == i else ent
-                           for j in range(len(body))]
-                parts.append(_eval_rule(body, head, sources, delta_leg=i))
-        cand = parts[0]
-        for p in parts[1:]:
-            cand = cand.unionByName(p)
         new = (
-            cand.distinct()
+            _delta_heads(rules, delta, ent).distinct()
             .join(F.broadcast(dset), list(_COLS), "left_anti")
             # D ⊆ E: heads derived with a leg outside E are impossible,
             # but the delta-sided eval can only produce E members anyway;

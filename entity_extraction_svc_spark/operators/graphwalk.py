@@ -4,12 +4,12 @@
 "how do these TWO entities touch" with direct edges and one shared
 neighbor.  The natural generalization a KG-construction pipeline needs —
 "everything within k hops of this entity, at its minimal hop distance" —
-is a frontier-expansion BFS, and its Spark shape is the same iterated
-DataFrame loop as pagerank/connected_components: per round, one hash join
-of the (small) frontier against the edge table on ``src``, one distinct,
-one anti-join against the visited set, with ``localCheckpoint`` cutting
-the lineage so per-round planner cost stays O(1) (measured doubling
-documented in canonicalize.py:108-112).
+is a frontier-expansion BFS.  ``_bfs_layers`` is the one layer loop
+behind :func:`bfs_distances` and :func:`shortest_path`: per round, one
+hash join of the (small) frontier against the edge table on ``src``, one
+min-parent groupBy on the reached node, one anti-join against the visited
+set, with ``localCheckpoint`` cutting the lineage so per-round planner
+cost stays O(1) (measured doubling documented in pagerank.py).
 
 Scale shape (10^12 triples): the edge table is repartitioned ONCE on
 ``src`` and persisted, so every round's frontier join reuses that single
@@ -26,6 +26,54 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _walk_edges(triples: DataFrame, direction: str) -> DataFrame:
+    """The (src, dst) edges a walk follows: 'out' subj->obj, 'in'
+    obj->subj, 'both' the undirected union.  Parallel edges (same pair,
+    different preds) collapse here, once, instead of inflating every
+    round's frontier; the repartition on src is THE shuffle the per-round
+    frontier joins reuse.  Persisted — the caller unpersists."""
+    if direction not in ("out", "in", "both"):
+        raise ValueError(f"direction must be out|in|both, got {direction!r}")
+    fwd = triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+    rev = triples.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
+    edges = {"out": fwd, "in": rev, "both": fwd.union(rev)}[direction]
+    return edges.distinct().repartition("src").persist()
+
+
+def _bfs_layers(triples: DataFrame, source: str, max_hops: int,
+                direction: str, target: str | None = None) -> DataFrame:
+    """The layered BFS: (entity, dist, parent) for every entity within
+    ``max_hops`` of ``source``, ``parent`` the MINIMUM (by id) in-neighbor
+    from the previous layer (null for the source).  Stops after the layer
+    that reaches ``target``, when one is given."""
+    edges = _walk_edges(triples, direction)
+    visited = triples.sparkSession.createDataFrame(
+        [(source, 0, None)], "entity string, dist int, parent string"
+    ).localCheckpoint(eager=True)
+    frontier = visited.select("entity")
+    found = source == target
+    for d in range(1, max_hops + 1):
+        if found:
+            break
+        nxt = (
+            frontier.join(edges, frontier["entity"] == edges["src"])
+            .groupBy(F.col("dst").alias("entity"))
+            .agg(F.min("src").alias("parent"))
+            .join(visited.select("entity"), "entity", "left_anti")
+            .withColumn("dist", F.lit(d))
+            .select("entity", "dist", "parent")
+            .localCheckpoint(eager=True)
+        )
+        if nxt.limit(1).count() == 0:
+            break
+        visited = visited.union(nxt).localCheckpoint(eager=True)
+        frontier = nxt.select("entity")
+        found = (target is not None and
+                 nxt.filter(F.col("entity") == target).limit(1).count() > 0)
+    edges.unpersist()
+    return visited
+
+
 def bfs_distances(triples: DataFrame, source: str, max_hops: int = 3,
                   direction: str = "out") -> DataFrame:
     """(entity, dist) for every entity within ``max_hops`` of ``source``,
@@ -37,37 +85,9 @@ def bfs_distances(triples: DataFrame, source: str, max_hops: int = 3,
     a pure function of the edge set; no tie-breaking needed because BFS
     layers are set-valued.
     """
-    if direction not in ("out", "in", "both"):
-        raise ValueError(f"direction must be out|in|both, got {direction!r}")
-    fwd = triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    rev = triples.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
-    edges = {"out": fwd, "in": rev, "both": fwd.union(rev)}[direction]
-    # parallel edges (same pair, different preds) collapse before the
-    # loop: dedup once instead of distinct-ing an inflated frontier every
-    # round.  repartition on src makes this THE shuffle the per-round
-    # frontier joins reuse.
-    edges = edges.distinct().repartition("src").persist()
-
-    spark = triples.sparkSession
-    visited = spark.createDataFrame(
-        [(source, 0)], "entity string, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for d in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier["entity"] == edges["src"])
-            .select(F.col("dst").alias("entity"))
-            .distinct()
-            .join(visited, "entity", "left_anti")
-            .withColumn("dist", F.lit(d))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    edges.unpersist()
-    return visited
+    return _bfs_layers(triples, source, max_hops, direction).select(
+        "entity", "dist"
+    )
 
 
 def bfs_oracle_sql(triples_sql: str, source: str, max_hops: int,
@@ -220,45 +240,14 @@ def shortest_path(triples: DataFrame, source: str, target: str,
     in-neighbor from the previous layer; the path is the predecessor walk
     back from the target.  A pure function of the edge set.
 
-    Scale shape: the layered BFS is :func:`bfs_distances` (edge table
-    shuffled once on src, frontier-bounded rounds) with a parent min-agg
-    per round; reconstruction then touches ``dist(target) <= max_hops``
-    single-row lookups against the small parents frame — bounded driver
+    Scale shape: the layered BFS of :func:`bfs_distances`, stopped at the
+    target's layer; reconstruction then touches ``dist(target) <= max_hops``
+    single-row lookups against the small visited frame — bounded driver
     round-trips of one row each, the same sanctioned pattern as
     pagerank's per-iteration scalar, NOT a data-sized collect.
     """
-    if direction not in ("out", "in", "both"):
-        raise ValueError(f"direction must be out|in|both, got {direction!r}")
-    fwd = triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    rev = triples.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
-    edges = {"out": fwd, "in": rev, "both": fwd.union(rev)}[direction]
-    edges = edges.distinct().repartition("src").persist()
-
     spark = triples.sparkSession
-    visited = spark.createDataFrame(
-        [(source, 0, None)], "entity string, dist int, parent string"
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("entity")
-    found = source == target
-    for d in range(1, max_hops + 1):
-        if found:
-            break
-        nxt = (
-            frontier.join(edges, frontier["entity"] == edges["src"])
-            .groupBy(F.col("dst").alias("entity"))
-            .agg(F.min("src").alias("parent"))
-            .join(visited.select("entity"), "entity", "left_anti")
-            .withColumn("dist", F.lit(d))
-            .select("entity", "dist", "parent")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("entity")
-        found = nxt.filter(F.col("entity") == target).limit(1).count() > 0
-    edges.unpersist()
-
+    visited = _bfs_layers(triples, source, max_hops, direction, target)
     hit = visited.filter(F.col("entity") == target).first()
     if hit is None:
         return spark.createDataFrame([], "step int, entity string")
@@ -304,10 +293,15 @@ def shortest_path_oracle_sql(triples_sql: str, source: str, target: str,
     """
 
 
+#: Affected-region rows (the tagged base slice) up to which
+#: :func:`closure_delta` runs its fixpoint in-process instead of as a
+#: distributed loop.
+SMALL_REGION_LIMIT = 2_000_000
+
+
 def closure_delta(closure: DataFrame, new_edges: DataFrame,
                   max_iter: int = 32,
-                  max_depth: int = MAX_CLOSURE_DEPTH,
-                  small_region_limit: int = 2_000_000) -> DataFrame:
+                  max_depth: int = MAX_CLOSURE_DEPTH) -> DataFrame:
     """Incrementally maintain a materialized :func:`transitive_closure`
     when edges are ADDED (the daily-crawl case: a new ingest asserts a few
     thousand subclass links against a billion-pair closure): returns the
@@ -354,10 +348,12 @@ def closure_delta(closure: DataFrame, new_edges: DataFrame,
     incremental == recompute under the same cap.
 
     Adaptive fast path: when the tagged affected region is at most
-    ``small_region_limit`` rows, the fixpoint runs in-process over the
+    ``SMALL_REGION_LIMIT`` rows, the fixpoint runs in-process over the
     collected slices (the dedup resolve-tier pattern — identical output,
-    pinned in tests; the distributed loop remains for mega-ingests and
-    is test-forced via ``small_region_limit=0``).
+    pinned in tests; the distributed loop remains for mega-ingests).
+
+    Raises ``RuntimeError`` when either path has not converged after
+    ``max_iter`` rounds (a truncated overlay silently drops pairs).
     """
     # Workaround for a Spark 4.1 optimizer defect: the loop's
     # join-of-union-of-checkpointed-slices trees make
@@ -376,8 +372,7 @@ def closure_delta(closure: DataFrame, new_edges: DataFrame,
         _EXCL, f"{prev_excluded},{_RULE}" if prev_excluded else _RULE
     )
     try:
-        return _closure_delta_inner(closure, new_edges, max_iter, max_depth,
-                                    small_region_limit)
+        return _closure_delta_inner(closure, new_edges, max_iter, max_depth)
     finally:
         if prev_excluded is None:
             spark.conf.unset(_EXCL)
@@ -394,6 +389,22 @@ def _compose_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
     ).select(
         F.col("x.src").alias("src"), F.col("y.dst").alias("dst"),
         (F.col("x.dist") + F.col("y.dist")).alias("dist"),
+    )
+
+
+def _improved_pairs(now: DataFrame, before: DataFrame) -> DataFrame:
+    """Rows of ``now`` that are new or strictly shorter than in ``before``,
+    checkpointed: the semi-naive delta of both maintenance loops."""
+    return (
+        now.alias("b")
+        .join(
+            before.alias("p"),
+            (F.col("b.src") == F.col("p.src"))
+            & (F.col("b.dst") == F.col("p.dst"))
+            & (F.col("p.dist") <= F.col("b.dist")),
+            "left_anti",
+        )
+        .localCheckpoint(eager=True)
     )
 
 
@@ -465,12 +476,15 @@ def _delta_small(pdf, seed_pairs, max_iter: int, max_depth: int) -> dict:
             if v < overlay.get(k, max_depth + 1):
                 overlay[k] = delta[k] = v
                 _index(k, v)
+    if delta:
+        raise RuntimeError(
+            f"closure_delta did not converge in {max_iter} rounds"
+        )
     return overlay
 
 
 def _closure_delta_inner(closure: DataFrame, new_edges: DataFrame,
-                         max_iter: int, max_depth: int,
-                         small_region_limit: int) -> DataFrame:
+                         max_iter: int, max_depth: int) -> DataFrame:
     base = closure.select("src", "dst", "dist")
     seed = (
         new_edges.select(
@@ -551,10 +565,10 @@ def _closure_delta_inner(closure: DataFrame, new_edges: DataFrame,
     # slice, run the SAME recurrence in-process, parallelize the overlay
     # back; the final streamed merge below is shared by both paths and
     # the two are pinned equal in tests.  The collect is bounded by
-    # small_region_limit rows (a mega-ingest takes the distributed loop).
+    # SMALL_REGION_LIMIT rows (a mega-ingest takes the distributed loop).
     n_tagged = tagged.count()
     spark = closure.sparkSession
-    if n_tagged <= small_region_limit:
+    if n_tagged <= SMALL_REGION_LIMIT:
         import pandas as pd
 
         seed_pairs = [(r["src"], r["dst"]) for r in seed.collect()]
@@ -584,33 +598,15 @@ def _closure_delta_inner(closure: DataFrame, new_edges: DataFrame,
     base_right = _slice("_src_in_r")
     base_prev = _slice("_in_sxr")
 
-    _min_merge = _min_merge_pairs
-
     def _prev_slice(keys: DataFrame) -> DataFrame:
         return base_prev.join(
             keys.select("src", "dst").distinct(), ["src", "dst"],
             "left_semi",
         )
 
-    def _improved(now: DataFrame, before: DataFrame) -> DataFrame:
-        # rows of `now` that are new or strictly better than `before`
-        return (
-            now.alias("b")
-            .join(
-                before.alias("p"),
-                (F.col("b.src") == F.col("p.src"))
-                & (F.col("b.dst") == F.col("p.dst"))
-                & (F.col("p.dist") <= F.col("b.dist")),
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    _compose = _compose_pairs
-
     prev_best0 = _prev_slice(seed)
-    overlay = _min_merge(seed, prev_best0)
-    delta = _improved(overlay, prev_best0)
+    overlay = _min_merge_pairs(seed, prev_best0)
+    delta = _improved_pairs(overlay, prev_best0)
     for _ in range(max_iter):
         if delta.limit(1).count() == 0:
             break
@@ -622,13 +618,13 @@ def _closure_delta_inner(closure: DataFrame, new_edges: DataFrame,
         # reusing a union inside a further join trips Spark's
         # InferFiltersFromConstraints with a key-not-found on the
         # deduplicated branch ids.)
-        mid = _compose(delta, base_right)
-        cand = _min_merge(
+        mid = _compose_pairs(delta, base_right)
+        cand = _min_merge_pairs(
             mid,
-            _compose(base_left, mid),
-            _compose(base_left, delta),
-            _compose(delta, overlay),
-            _compose(overlay, delta),
+            _compose_pairs(base_left, mid),
+            _compose_pairs(base_left, delta),
+            _compose_pairs(delta, overlay),
+            _compose_pairs(overlay, delta),
         ).filter(F.col("dist") <= F.lit(max_depth))
         # previous best over every key the candidates or overlay touch;
         # lazy (referenced twice over small frames — cheaper than one
@@ -636,8 +632,13 @@ def _closure_delta_inner(closure: DataFrame, new_edges: DataFrame,
         prev_best = overlay.unionByName(_prev_slice(cand)).groupBy(
             "src", "dst"
         ).agg(F.min("dist").alias("dist"))
-        overlay = _min_merge(prev_best, cand)
-        delta = _improved(overlay, prev_best)
+        overlay = _min_merge_pairs(prev_best, cand)
+        delta = _improved_pairs(overlay, prev_best)
+    else:
+        if delta.limit(1).count():
+            raise RuntimeError(
+                f"closure_delta did not converge in {max_iter} rounds"
+            )
     untouched = base.join(
         overlay.select("src", "dst"), ["src", "dst"], "left_anti"
     )
@@ -748,10 +749,6 @@ def closure_delete(closure: DataFrame, deleted_edges: DataFrame,
     t_right = trusted.join(F.broadcast(aff_dsts), "dst", "left_semi") \
         .localCheckpoint(eager=True)
 
-    _compose = _compose_pairs
-
-    _min_merge = _min_merge_pairs
-
     def _on_affected(df: DataFrame) -> DataFrame:
         return df.join(F.broadcast(aff_keys), ["src", "dst"], "left_semi") \
             .filter(F.col("dist") <= F.lit(max_depth))
@@ -759,29 +756,19 @@ def closure_delete(closure: DataFrame, deleted_edges: DataFrame,
     s1 = _on_affected(
         _edge_pairs(remaining_edges).withColumn("dist", F.lit(1))
     )
-    s2 = _on_affected(_compose(t_left, t_right))
-    overlay = _min_merge(s1, s2)
+    s2 = _on_affected(_compose_pairs(t_left, t_right))
+    overlay = _min_merge_pairs(s1, s2)
     delta = overlay
     for _ in range(max_iter):
         if delta.limit(1).count() == 0:
             break
-        cand = _min_merge(
-            _on_affected(_compose(delta, t_right)),
-            _on_affected(_compose(t_left, delta)),
-            _on_affected(_compose(delta, overlay)),
-            _on_affected(_compose(overlay, delta)),
+        cand = _min_merge_pairs(
+            _on_affected(_compose_pairs(delta, t_right)),
+            _on_affected(_compose_pairs(t_left, delta)),
+            _on_affected(_compose_pairs(delta, overlay)),
+            _on_affected(_compose_pairs(overlay, delta)),
         )
         prev = overlay
-        overlay = _min_merge(prev, cand)
-        delta = (
-            overlay.alias("b")
-            .join(
-                prev.alias("p"),
-                (F.col("b.src") == F.col("p.src"))
-                & (F.col("b.dst") == F.col("p.dst"))
-                & (F.col("p.dist") <= F.col("b.dist")),
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
+        overlay = _min_merge_pairs(prev, cand)
+        delta = _improved_pairs(overlay, prev)
     return trusted.unionByName(overlay)

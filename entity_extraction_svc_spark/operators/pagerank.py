@@ -10,10 +10,14 @@ redistribution (Page et al. 1999):
 
     r'(v) = (1-d)/N + d * ( sum_{u -> v} r(u)/outdeg(u) + dangling/N )
 
-Execution shape (the one that survives a 10^10-edge graph):
-  - edges are DISTINCT (src, dst) pairs; contributions are an equi-join of
-    the rank vector to the edge list on ``src`` followed by a sum groupBy
-    on ``dst`` — both shuffles hash-partition on node id, and AQE's skew
+Every variant (global, warm-start, weighted, personalized) runs the one
+power iteration, ``_power_iterate``; they differ only in edge weights,
+initial vector and teleport form.  Its execution shape (the one that
+survives a 10^10-edge graph):
+  - edges are (src, dst, w) rows — distinct pairs at w = 1, or
+    weight-summed parallel edges; contributions are an equi-join of the
+    rank vector to the edge list on ``src`` followed by a sum groupBy on
+    ``dst`` — both shuffles hash-partition on node id, and AQE's skew
     split handles celebrity in-degree nodes.
   - the rank vector is ``localCheckpoint``-ed each iteration.  PERSIST IS
     NOT ENOUGH: a persisted DataFrame keeps its full logical plan, and
@@ -35,11 +39,106 @@ across engines, which is what the DuckDB oracle certifies.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 DAMPING = 0.85
 ITERATIONS = 10
+
+
+def _edge_frame(edges: DataFrame, src_col: str, dst_col: str,
+                weight_col: str | None = None) -> DataFrame:
+    """Persisted (src, dst, w) edges: distinct pairs at ``w = 1.0``, or
+    with ``weight_col`` parallel edges summing their weights."""
+    pairs = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
+    if weight_col is None:
+        e = edges.select(*pairs).distinct().withColumn("w", F.lit(1.0))
+    else:
+        e = (
+            edges.select(*pairs, F.col(weight_col).cast("double").alias("w"))
+            .groupBy("src", "dst")
+            .agg(F.sum("w").alias("w"))
+        )
+    return e.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _node_frame(e: DataFrame, extra: DataFrame | None = None) -> DataFrame:
+    """Persisted distinct endpoints of ``e`` (plus ``extra`` nodes)."""
+    nodes = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))
+    )
+    if extra is not None:
+        nodes = nodes.unionByName(extra)
+    return nodes.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _uniform_update(n: int, damping: float):
+    """r' = (1-d)/n + d * (contrib + dangling/n): uniform teleport."""
+    return lambda contrib, dangling: (
+        F.lit((1.0 - damping) / n)
+        + F.lit(damping) * (contrib + F.lit(dangling / n))
+    )
+
+
+def _seeded_update(tp: Column, damping: float):
+    """r' = (1-d)*s + d * (contrib + dangling*s): teleport and dangling
+    mass restart on the seed indicator ``tp``."""
+    return lambda contrib, dangling: (
+        F.lit(1.0 - damping) * tp
+        + F.lit(damping) * (contrib + F.lit(dangling) * tp)
+    )
+
+
+def _power_iterate(e: DataFrame, nodes: DataFrame, ranks: DataFrame,
+                   update, max_iterations: int,
+                   tol: float | None = None) -> tuple[DataFrame, int]:
+    """The damped power iteration every PageRank variant runs over the
+    (src, dst, w) edges ``e``: per iteration, the dangling mass as a
+    scalar action, one contribution join + groupBy on ``dst``, and the
+    ``update(contrib, dangling)`` rank column, ``localCheckpoint``-ed (the
+    lineage cut of the module docstring).  ``tol``: stop once the L1
+    change of the vector drops below it.  Returns (ranks, iterations_run).
+    """
+    outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
+    ranks = ranks.localCheckpoint(eager=True)
+    iters_run = 0
+    for _ in range(max_iterations):
+        dangling = (
+            ranks.join(outw, ranks["node"] == outw["src"], "left")
+            .filter(F.col("outw").isNull())
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+            .first()[0]
+        )
+        contrib = (
+            ranks.join(e, ranks["node"] == e["src"])
+            .join(outw, "src")
+            .groupBy("dst")
+            .agg(
+                F.sum(F.col("rank") * F.col("w") / F.col("outw"))
+                .alias("contrib")
+            )
+        )
+        prev = ranks
+        ranks = (
+            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+            .select(
+                "node",
+                update(F.coalesce("contrib", F.lit(0.0)), dangling)
+                .alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        iters_run += 1
+        if tol is not None:
+            delta = (
+                ranks.alias("a")
+                .join(prev.alias("b"), "node")
+                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
+                .first()[0]
+            )
+            if delta is not None and delta < tol:
+                break
+    return ranks, iters_run
 
 
 def pagerank(edges: DataFrame, iterations: int = ITERATIONS,
@@ -85,29 +184,24 @@ def pagerank_warm(edges: DataFrame, init_ranks: DataFrame | None = None,
 
     Returns (ranks, iterations_run).
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    return _uniform_rank(_edge_frame(edges, src_col, dst_col), init_ranks,
+                         max_iterations, tol, damping)
+
+
+def _uniform_rank(e: DataFrame, init_ranks: DataFrame | None,
+                  max_iterations: int, tol: float | None,
+                  damping: float) -> tuple[DataFrame, int]:
+    """Uniform-teleport ranks over the persisted edges ``e`` from the
+    uniform or the renormalized ``init_ranks`` start (see
+    :func:`pagerank_warm`); unpersists ``e``."""
+    nodes = _node_frame(e)
     n = nodes.count()
     if n == 0:
         e.unpersist()
         nodes.unpersist()
         return nodes.select("node", F.lit(0.0).alias("rank")), 0
-    deg = e.groupBy("src").agg(F.count("*").alias("outd"))
-
-    # lineage cut per iteration — see module docstring for why persist
-    # alone makes iteration cost double
     if init_ranks is None:
-        ranks = nodes.select(
-            "node", F.lit(1.0 / n).alias("rank")
-        ).localCheckpoint(eager=True)
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     else:
         seeded = nodes.join(
             init_ranks.select("node", F.col("rank").alias("_init")),
@@ -119,42 +213,10 @@ def pagerank_warm(edges: DataFrame, init_ranks: DataFrame | None = None,
         total = seeded.agg(F.sum("rank")).first()[0] or 1.0
         ranks = seeded.select(
             "node", (F.col("rank") / F.lit(total)).alias("rank")
-        ).localCheckpoint(eager=True)
-    iters_run = 0
-    for _ in range(max_iterations):
-        with_deg = ranks.join(deg, ranks["node"] == deg["src"], "left")
-        dangling = with_deg.filter(F.col("outd").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))
-        ).first()[0]
-        contrib = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(deg, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("outd")).alias("contrib"))
         )
-        prev = ranks
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        iters_run += 1
-        if tol is not None:
-            delta = (
-                ranks.alias("a")
-                .join(prev.alias("b"), "node")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                .first()[0]
-            )
-            if delta is not None and delta < tol:
-                break
+    ranks, iters_run = _power_iterate(
+        e, nodes, ranks, _uniform_update(n, damping), max_iterations, tol
+    )
     # UNROUNDED on purpose: rounding to 6 places costs ~2.5e-7 L1 noise
     # PER NODE, which across a 10^7-node vector aggregates to ~1e-2 —
     # enough to swamp a small edit's true perturbation and erase the
@@ -162,10 +224,9 @@ def pagerank_warm(edges: DataFrame, init_ranks: DataFrame | None = None,
     # rounded vector took 32 iterations, from the exact vector ~1/4 of
     # that).  :func:`pagerank` rounds at its boundary for the oracle
     # contract; warm-start chains keep full precision.
-    out = ranks
     for df in (nodes, e):
         df.unpersist()
-    return out, iters_run
+    return ranks, iters_run
 
 
 def pagerank_oracle_sql(edges_sql: str, iterations: int = ITERATIONS,
@@ -244,71 +305,17 @@ def weighted_pagerank(edges: DataFrame, weight_col: str = "w",
     exactly (pinned by test), so this is a strict generalization kept
     separate from the driver-pinned unweighted recurrence.
 
-    Same execution shape as :func:`pagerank_warm`: weight-summed edges and
-    out-weight totals persisted once, one join+groupBy pair per iteration,
-    rank vector localCheckpoint-ed, dangling mass as a scalar action.
     Zero- or negative-weight edges are rejected (they would corrupt the
     stochastic-matrix invariant silently).
     """
-    w = F.col(weight_col).cast("double")
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-            w.alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = _edge_frame(edges, src_col, dst_col, weight_col)
     bad = e.filter(F.col("w").isNull() | (F.col("w") <= 0)).count()
     if bad:
         e.unpersist()
         raise ValueError(
             f"{bad} edges have null or non-positive total weight"
         )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        nodes.unpersist()
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
-
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n).alias("rank")
-    ).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        with_deg = ranks.join(outw, ranks["node"] == outw["src"], "left")
-        dangling = with_deg.filter(F.col("outw").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))
-        ).first()[0]
-        contrib = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(outw, "src")
-            .groupBy("dst")
-            .agg(
-                F.sum(F.col("rank") * F.col("w") / F.col("outw")).alias("contrib")
-            )
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    for df in (nodes, e):
-        df.unpersist()
+    ranks, _ = _uniform_rank(e, None, iterations, None, damping)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -365,55 +372,22 @@ def personalized_pagerank(edges: DataFrame, seeds: list[str],
     exactly 0, which is what makes the operator cheap in practice: the
     support of the vector is the reachable set, not the corpus.
 
-    Same execution shape as :func:`pagerank` (distinct edges persisted
-    once, per-iteration join + groupBy on node id, localCheckpoint lineage
-    cut, scalar dangling aggregate).  ``seeds`` is a small literal list —
-    the teleport indicator compiles to an ``isin`` codegen expression, no
-    extra join.
+    ``seeds`` is a small literal list — the teleport indicator compiles to
+    an ``isin`` codegen expression, no extra join.
     """
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed list")
     k = float(len(seeds))
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    spark = edges.sparkSession
-    seed_nodes = spark.createDataFrame([(s,) for s in seeds], "node string")
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .unionByName(seed_nodes)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    e = _edge_frame(edges, src_col, dst_col)
+    seed_nodes = edges.sparkSession.createDataFrame(
+        [(s,) for s in seeds], "node string"
     )
+    nodes = _node_frame(e, seed_nodes)
     tp = F.when(F.col("node").isin(seeds), F.lit(1.0 / k)).otherwise(F.lit(0.0))
-    deg = e.groupBy("src").agg(F.count("*").alias("outd"))
-
-    ranks = nodes.select("node", tp.alias("rank")).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        with_deg = ranks.join(deg, ranks["node"] == deg["src"], "left")
-        dangling = with_deg.filter(F.col("outd").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))
-        ).first()[0]
-        contrib = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(deg, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("outd")).alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * tp
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling) * tp)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks, _ = _power_iterate(
+        e, nodes, nodes.select("node", tp.alias("rank")),
+        _seeded_update(tp, damping), iterations,
+    )
     out = ranks.select("node", F.round("rank", 6).alias("rank")).localCheckpoint(
         eager=True
     )

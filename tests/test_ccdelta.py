@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from entity_extraction_svc_spark.operators import canonicalize
 from entity_extraction_svc_spark.operators.canonicalize import (
     cc_delta,
     connected_components,
@@ -95,12 +96,22 @@ def test_remove_without_edges_raises(spark):
         cc_delta(labels, remove_edges=_df(spark, [("a1", "a2")]))
 
 
-def test_forced_distributed_path_parity(spark):
+def test_forced_distributed_path_parity(spark, monkeypatch):
+    monkeypatch.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
     got = _check(
         spark, remove=[("a2", "a3")], add=[("a4", "b2"), ("n1", "n2")],
-        local_max_edges=0,
     )
     assert got["n1"] == "n1"
+
+
+def test_distributed_cc_raises_without_convergence(spark, monkeypatch):
+    # one hash-min + pointer-jump round cannot label a 13-node chain;
+    # the loop must raise rather than return split components
+    monkeypatch.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
+    chain = _df(spark, [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(12)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=1)
+    assert set(_cc_map(connected_components(chain)).values()) == {"c00"}
 
 
 def test_partitioning_invariance(spark):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from entity_extraction_svc_spark.operators import chain
 from entity_extraction_svc_spark.operators.chain import (
     RDFS_ONTOLOGY,
     RDFS_RULES,
@@ -87,28 +88,29 @@ def test_derived_only(spark):
     assert got == want and want  # non-empty delta
 
 
-def test_fold_path_identical(spark):
-    """fold_rows=1 forces the overlay to fold into the partitioned base
+def test_fold_path_identical(spark, monkeypatch):
+    """FOLD_ROWS=1 forces the overlay to fold into the partitioned base
     every round; the result must not change (base+overlay is an internal
     layout choice, not a semantics choice)."""
-    got = _set(forward_chain(_df(spark, _CHAIN), _R1, fold_rows=1))
+    monkeypatch.setattr(chain, "FOLD_ROWS", 1)
+    got = _set(forward_chain(_df(spark, _CHAIN), _R1))
     assert got == _py_fixpoint(_CHAIN, _R1)
     # derived_only must also survive folding (derived rows live in base
     # after a fold and are recovered by the anti-join against the input)
-    d = _set(forward_chain(_df(spark, _CHAIN), _R1, fold_rows=1,
-                           derived_only=True))
+    d = _set(forward_chain(_df(spark, _CHAIN), _R1, derived_only=True))
     assert d == _py_fixpoint(_CHAIN, _R1) - set(_CHAIN)
 
 
-def test_broadcast_gate_path_identical(spark):
-    """broadcast_rows=0 forces every round's dedup onto the shuffle
+def test_broadcast_gate_path_identical(spark, monkeypatch):
+    """BROADCAST_ROWS=0 forces every round's dedup onto the shuffle
     anti-join path (the r6 bootstrap-scale gate, VERDICT r5 #2); the
     fixpoint must not change — the broadcast is a physical choice only."""
-    got = _set(forward_chain(_df(spark, _CHAIN), _R1, broadcast_rows=0))
+    monkeypatch.setattr(chain, "BROADCAST_ROWS", 0)
+    got = _set(forward_chain(_df(spark, _CHAIN), _R1))
     assert got == _py_fixpoint(_CHAIN, _R1)
     # gate + fold together (both non-default paths at once)
-    got2 = _set(forward_chain(_df(spark, _CHAIN), _R1, broadcast_rows=0,
-                              fold_rows=1, derived_only=True))
+    monkeypatch.setattr(chain, "FOLD_ROWS", 1)
+    got2 = _set(forward_chain(_df(spark, _CHAIN), _R1, derived_only=True))
     assert got2 == _py_fixpoint(_CHAIN, _R1) - set(_CHAIN)
 
 

@@ -229,6 +229,7 @@ def test_shortest_path_oracle_parity_on_fixture_kb(spark, fixture_dir):
 
 # --- incremental closure maintenance ------------------------------------------
 
+from entity_extraction_svc_spark.operators import graphwalk  # noqa: E402
 from entity_extraction_svc_spark.operators.graphwalk import closure_delta  # noqa: E402
 
 
@@ -359,9 +360,9 @@ def test_closure_delete_chained_rederivation(spark):
     assert got[("a", "c")] == 4 and got[("a", "d")] == 5
 
 
-def test_closure_delta_small_equals_distributed(spark):
+def test_closure_delta_small_equals_distributed(spark, monkeypatch):
     # the adaptive in-process fast path and the distributed loop
-    # (test-forced via small_region_limit=0) produce identical closures
+    # (test-forced via SMALL_REGION_LIMIT=0) produce identical closures
     cases = [
         ([("a", "b"), ("b", "c"), ("x", "y"), ("y", "z")], [("c", "x")]),
         ([("a", "b"), ("b", "c"), ("c", "d")], [("a", "c")]),   # improve
@@ -371,8 +372,26 @@ def test_closure_delta_small_equals_distributed(spark):
         base = transitive_closure(_edges_df(spark, old))
         new_df = spark.createDataFrame(new, "src string, dst string")
         small = _pairs(closure_delta(base, new_df))
-        dist = _pairs(closure_delta(base, new_df, small_region_limit=0))
+        with monkeypatch.context() as m:
+            m.setattr(graphwalk, "SMALL_REGION_LIMIT", 0)
+            dist = _pairs(closure_delta(base, new_df))
         assert small == dist == _full(spark, old + new), (old, new)
+
+
+def test_closure_delta_raises_without_convergence(spark, monkeypatch):
+    # a 12-edge new chain needs several semi-naive rounds; one round
+    # leaves pairs missing, so both paths must raise instead of
+    # returning the truncated overlay
+    old = [("a", "n0")]
+    new = [(f"n{i}", f"n{i + 1}") for i in range(12)]
+    base = transitive_closure(_edges_df(spark, old))
+    new_df = spark.createDataFrame(new, "src string, dst string")
+    assert _pairs(closure_delta(base, new_df)) == _full(spark, old + new)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        closure_delta(base, new_df, max_iter=1)
+    monkeypatch.setattr(graphwalk, "SMALL_REGION_LIMIT", 0)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        closure_delta(base, new_df, max_iter=1)
 
 
 def test_maintain_combined_remove_add_propagates(spark):

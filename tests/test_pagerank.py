@@ -190,6 +190,19 @@ def test_ppr_oracle_sql_parity(spark):
     assert got == pytest.approx(want)
 
 
+def test_ppr_with_every_node_seeded_equals_pagerank(spark):
+    # a uniform seed set makes the PPR teleport the global one, so both
+    # update forms must agree on the rounded ranks
+    from entity_extraction_svc_spark.operators.pagerank import pagerank
+
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"),
+             ("c", "e")]
+    nodes = sorted({v for e in edges for v in e})
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = {r.node: r.rank for r in pagerank(df, iterations=10).collect()}
+    assert _ppr(spark, edges, nodes, iterations=10) == want
+
+
 # --- warm start (round 5) -----------------------------------------------------
 
 from entity_extraction_svc_spark.operators.pagerank import (  # noqa: E402

@@ -245,3 +245,22 @@ def test_ntriples_annotation_roundtrip_byte_identical(spark):
     assert parsed.columns == ["subj", "pred", "obj", "lang", "dtype"]
     back = format_ntriples(parsed)
     assert sorted(r["line"] for r in back.collect()) == sorted(lines)
+
+
+def test_upsert_entities_new_rows_win(spark):
+    # S8 MERGE stand-in: a key present in both keeps only the new row,
+    # untouched keys survive, new keys are added; column order follows
+    # the existing table
+    from entity_extraction_svc_spark.sources.ntriples import upsert_entities
+
+    existing = spark.createDataFrame(
+        [("Q1", "Mona Lisa"), ("Q2", "Paris")], "qid string, label string"
+    )
+    new = spark.createDataFrame(
+        [("La Joconde", "Q1"), ("Rome", "Q3")], "label string, qid string"
+    )
+    out = upsert_entities(existing, new)
+    assert out.columns == ["qid", "label"]
+    assert sorted(map(tuple, out.collect())) == [
+        ("Q1", "La Joconde"), ("Q2", "Paris"), ("Q3", "Rome"),
+    ]

@@ -771,13 +771,14 @@ def test_resolve_near_dups_long_chain(spark):
     assert all(got[i] == (0, i == 0) for i in range(n))
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     """The single-task union-find fast path and the distributed hash-min +
     pointer-jump loop produce identical components (same min-label comp
     ids) on a graph mixing a long chain, cliques and isolated self-loops —
     and the 61-chain still converges when the distributed path is FORCED
-    (local_max_edges=0), so the loop stays covered now that small graphs
+    (LOCAL_MAX_EDGES=0), so the loop stays covered now that small graphs
     default to the local path."""
+    from entity_extraction_svc_spark.operators import canonicalize
     from entity_extraction_svc_spark.operators.canonicalize import (
         connected_components,
     )
@@ -788,21 +789,24 @@ def test_connected_components_paths_agree(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     local = {r.node: r.comp
              for r in connected_components(df).collect()}
+    monkeypatch.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
     dist = {r.node: r.comp
-            for r in connected_components(df, local_max_edges=0).collect()}
+            for r in connected_components(df).collect()}
     assert local == dist
     assert all(local[i] == 0 for i in range(62))
     assert all(local[100 + i] == 100 for i in range(5))
     assert local[200] == 200 and local[300] == 300 and local[301] == 300
 
 
-def test_connected_components_matches_reachability_oracle(spark):
+def test_connected_components_matches_reachability_oracle(spark,
+                                                         monkeypatch):
     """Both CC paths pinned against the recursive-CTE DEFINITION (comp =
     min label over the undirected reachable set) — the same generator the
     kg_connection part=wcc driver row runs."""
     import duckdb
     import pandas as pd
 
+    from entity_extraction_svc_spark.operators import canonicalize
     from entity_extraction_svc_spark.operators.canonicalize import (
         connected_components,
         wcc_oracle_sql,
@@ -816,8 +820,9 @@ def test_connected_components_matches_reachability_oracle(spark):
     want = sorted(con.sql(
         wcc_oracle_sql("SELECT src, dst FROM wcc_in")).fetchall())
     assert got == want
+    monkeypatch.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
     forced = sorted((r.node, r.comp) for r in connected_components(
-        df, local_max_edges=0).collect())
+        df).collect())
     assert forced == want
 
 
