@@ -103,8 +103,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     hash-min + pointer-jumping loop below, whose per-round shuffles are
     the O(log diameter) scale path.  The one count() that picks the path
     is a partial-agg job over the already-persisted edge list.  The
-    distributed loop raises ``RuntimeError`` when labels still change
-    after ``max_iter`` rounds (truncated labels split components)."""
+    distributed loop confirms convergence only by a round that changes
+    no label, so at most ``max_iter - 1`` rounds can change labels; when
+    the last allowed round still changes one it raises ``RuntimeError``
+    (truncated labels split components)."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -166,6 +168,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         if changed == 0:
             break
     else:
+        sym.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )

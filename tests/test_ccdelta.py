@@ -30,16 +30,20 @@ def _cc_map(df):
     return {r["node"]: r["comp"] for r in df.collect()}
 
 
-def _check(spark, add=None, remove=None, base=_EDGES, **kw):
+def _check(spark, add=None, remove=None, base=_EDGES, distributed=False):
     edges = _df(spark, base)
     labels = connected_components(edges)
-    got = cc_delta(
-        labels,
-        add_edges=_df(spark, add) if add else None,
-        remove_edges=_df(spark, remove) if remove else None,
-        edges=edges if remove else None,
-        **kw,
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        if distributed:
+            # only cc_delta's own clustering takes the distributed loop;
+            # the input labels and the recompute below stay on union-find
+            mp.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
+        got = cc_delta(
+            labels,
+            add_edges=_df(spark, add) if add else None,
+            remove_edges=_df(spark, remove) if remove else None,
+            edges=edges if remove else None,
+        )
     norm = {tuple(sorted(p)) for p in base}
     if remove:
         norm -= {tuple(sorted(p)) for p in remove}
@@ -96,10 +100,10 @@ def test_remove_without_edges_raises(spark):
         cc_delta(labels, remove_edges=_df(spark, [("a1", "a2")]))
 
 
-def test_forced_distributed_path_parity(spark, monkeypatch):
-    monkeypatch.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
+def test_forced_distributed_path_parity(spark):
     got = _check(
         spark, remove=[("a2", "a3")], add=[("a4", "b2"), ("n1", "n2")],
+        distributed=True,
     )
     assert got["n1"] == "n1"
 
@@ -109,8 +113,11 @@ def test_distributed_cc_raises_without_convergence(spark, monkeypatch):
     # the loop must raise rather than return split components
     monkeypatch.setattr(canonicalize, "LOCAL_MAX_EDGES", 0)
     chain = _df(spark, [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(12)])
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=1)
+    # the failed call leaves its symmetrized edge list uncached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert set(_cc_map(connected_components(chain)).values()) == {"c00"}
 
 
